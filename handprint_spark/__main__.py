@@ -7,8 +7,9 @@ Option-by-option mapping (reference flag -> this engine):
 
   -l  list known services            -> same (service_fanout.SERVICES)
   -V  version                        -> same
-  -s  services to invoke             -> extract_documents(services=...)
-                                        + per-service fan-out sink
+  -s  services to invoke             -> validated only: the local
+                                        decoder serves every service
+                                        identically
   -o  output directory               -> table-sink root (parquet dirs;
                                         on a cluster: catalog tables)
   -t  threads (default #cores/2)     -> local[N] / session parallelism
@@ -180,7 +181,7 @@ def run_cli(argv: list[str] | None = None) -> int:
         )
         return 0
 
-    services = _parse_services(args.services)
+    _parse_services(args.services)  # validates the names
     display = _parse_display(args.display)
     shift = _parse_shift(args.text_move)
     if not 0.0 <= args.confidence <= 1.0:
@@ -290,9 +291,7 @@ def run_cli(argv: list[str] | None = None) -> int:
         if keep_filter is not None:
             docs = keep_filter(docs)
         spans = spanify(docs)
-        metrics = run_batch(
-            spark, spans, results_dir, lineage_dir, batch_id, services=services
-        )
+        metrics = run_batch(spark, spans, results_dir, lineage_dir, batch_id)
         total_docs += metrics["docs"]
         if not args.quiet:
             print(

@@ -99,6 +99,32 @@ def render_pixels(text: str, width: int, height: int, binarized: bool = False) -
     return px
 
 
+def _header(fmt: str, width: int, height: int, npages: int, flags: int, textlen: int) -> bytes:
+    return _HEADER.pack(
+        MAGIC, fmt.encode("ascii")[:8].ljust(8, b"\0"), width, height, npages, flags, textlen
+    )
+
+
+def encode_pixels(
+    px: np.ndarray,
+    pages: list[str] | tuple[str, ...],
+    fmt: str = "png",
+    flags: int = 0,
+    level: int = 6,
+    pad_to: int | None = None,
+) -> bytes:
+    """Encode an HPM1 object around an explicit page-1 pixel plane
+    (height x width), deflated at ``level``; ``pad_to`` grows the
+    encoding with incompressible padding to a target byte size."""
+    joined = "\f".join(pages).encode("utf-8")
+    header = _header(fmt, px.shape[1], px.shape[0], len(pages), flags, len(joined))
+    pixels = zlib.compress(np.asarray(px, dtype=np.uint8).tobytes(), level)
+    base_len = len(header) + len(joined) + 4 + len(pixels)
+    pad_len = max(0, (pad_to or 0) - base_len)
+    pad = _stream(b"HPM1-pad|" + joined, pad_len)
+    return header + joined + struct.pack("<I", pad_len) + pixels + pad
+
+
 def encode_media(
     text: str,
     fmt: str = "png",
@@ -117,21 +143,27 @@ def encode_media(
         # a clean MediaError, not an IndexError task failure — the
         # module's errors-are-values policy holds for encode too
         raise MediaError("cannot encode media with zero pages")
-    joined = "\f".join(page_texts).encode("utf-8")
-    flags = FLAG_BINARIZED if binarized else 0
     # level 1: on the sparse ink plane the ratio loss vs level 6 is a few
     # percent while deflate drops from ~35% of extraction CPU to ~10%
-    pixels = zlib.compress(
-        render_pixels(page_texts[0], width, height, binarized).tobytes(), 1
+    return encode_pixels(
+        render_pixels(page_texts[0], width, height, binarized), page_texts, fmt,
+        FLAG_BINARIZED if binarized else 0, level=1, pad_to=pad_to,
     )
-    header = _HEADER.pack(
-        MAGIC, fmt.encode("ascii")[:8].ljust(8, b"\0"), width, height,
-        len(page_texts), flags, len(joined),
-    )
-    base_len = len(header) + len(joined) + 4 + len(pixels)
-    pad_len = max(0, (pad_to or 0) - base_len)
-    pad = _stream(b"HPM1-pad|" + joined, pad_len)
-    return header + joined + struct.pack("<I", pad_len) + pixels + pad
+
+
+def _pixel_payload(data: bytes) -> bytes:
+    """Inflate and check the page-1 pixel plane of an object whose
+    header and text ``decode_media`` already accepted."""
+    _, _, width, height, _, _, textlen = _HEADER.unpack_from(data, 0)
+    off = _HEADER.size + textlen
+    (pad_len,) = struct.unpack_from("<I", data, off)
+    try:
+        raw = zlib.decompress(data[off + 4 : len(data) - pad_len])
+    except zlib.error as exc:
+        raise MediaError(f"corrupt pixel payload: {exc}") from exc
+    if len(raw) != width * height:
+        raise MediaError("pixel payload does not match dimensions")
+    return raw
 
 
 def decode_media(data: bytes, verify_pixels: bool = True) -> MediaInfo:
@@ -155,17 +187,8 @@ def decode_media(data: bytes, verify_pixels: bool = True) -> MediaInfo:
     except UnicodeDecodeError as exc:
         raise MediaError(f"corrupt text payload: {exc}") from exc
     page_texts = tuple(joined.split("\f")) if joined else ("",)
-    off += textlen
-    (pad_len,) = struct.unpack_from("<I", data, off)
-    off += 4
     if verify_pixels:
-        pix_comp = data[off : len(data) - pad_len]
-        try:
-            raw = zlib.decompress(pix_comp)
-        except zlib.error as exc:
-            raise MediaError(f"corrupt pixel payload: {exc}") from exc
-        if len(raw) != width * height:
-            raise MediaError("pixel payload does not match dimensions")
+        _pixel_payload(data)
     return MediaInfo(
         fmt_b.rstrip(b"\0").decode("ascii"), width, height, npages, flags,
         page_texts[0], page_texts, len(data),
@@ -175,23 +198,15 @@ def decode_media(data: bytes, verify_pixels: bool = True) -> MediaInfo:
 def decode_pixels(data: bytes) -> "np.ndarray":
     """Fully-verified decode returning the page-1 pixel plane
     (height x width uint8). The stored payload IS the rendered plane
-    (encode writes render_pixels' output), so consumers that need
-    pixels — feature extraction, perceptual hashing — get them from
-    the ONE zlib decompression the integrity check already performs,
-    instead of decode_media + a redundant re-render (2x the per-media
-    work, measured on the mm_phash_dedup path). Raises MediaError on
-    any corruption decode_media would reject."""
+    (encode writes render_pixels' output; annotate writes its overlay),
+    so consumers that need pixels — grids, feature extraction,
+    perceptual hashing — get them from the ONE zlib decompression the
+    integrity check already performs, instead of decode_media + a
+    redundant re-render (2x the per-media work, measured on the
+    mm_phash_dedup path). Raises MediaError on any corruption
+    decode_media would reject."""
     info = decode_media(data, verify_pixels=False)
-    textlen = len("\f".join(info.pages).encode("utf-8"))
-    off = _HEADER.size + textlen
-    (pad_len,) = struct.unpack_from("<I", data, off)
-    off += 4
-    try:
-        raw = zlib.decompress(data[off : len(data) - pad_len])
-    except zlib.error as exc:
-        raise MediaError(f"corrupt pixel payload: {exc}") from exc
-    if len(raw) != info.width * info.height:
-        raise MediaError("pixel payload does not match dimensions")
+    raw = _pixel_payload(data)
     return np.frombuffer(raw, dtype=np.uint8).reshape(info.height, info.width)
 
 
@@ -213,10 +228,7 @@ def swap_format(data: bytes, to_format: str, info: MediaInfo | None = None) -> b
     (pad_len,) = struct.unpack_from("<I", data, _HEADER.size + textlen)
     if pad_len:
         return None
-    header = _HEADER.pack(
-        MAGIC, fmt.encode("ascii")[:8].ljust(8, b"\0"),
-        info.width, info.height, 1, info.flags, textlen,
-    )
+    header = _header(fmt, info.width, info.height, 1, info.flags, textlen)
     return header + data[_HEADER.size :]
 
 

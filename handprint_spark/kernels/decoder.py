@@ -78,6 +78,13 @@ def layout_line(line: str, line_index: int) -> list[tuple[str, list, float]]:
     return out
 
 
+def page_text(text: str) -> str:
+    """The recognized text of a page: its lines joined with newlines.
+    The one definition of an OCR span's text, shared by ``decode_page``
+    and the extraction kernel (which needs no boxes)."""
+    return "\n".join(text.splitlines())
+
+
 def decode_page(text: str) -> TRResult:
     """Decode a page text into the unified TRResult shape."""
     lines = text.splitlines()
@@ -97,8 +104,7 @@ def decode_page(text: str) -> TRResult:
         x1 = max((b.bb[2] for b in boxes), default=MARGIN)
         y1 = MARGIN + (len(lines) - 1) * LINE_PITCH + CHAR_H
         boxes.insert(0, Box("para", _rect(MARGIN, MARGIN, x1, y1), "", page_score))
-    full_text = "\n".join(lines)
-    return TRResult(full_text, boxes, None)
+    return TRResult(page_text(text), boxes, None)
 
 
 def decode_media_bytes(data: bytes, trusted: bool = False) -> TRResult:

@@ -154,33 +154,7 @@ def annotate(
                 int(b["bb"][1]) + int(shift[1]),
                 b.get("text") or "",
             )
-    return _encode_with_pixels(info, px)
-
-
-def _encode_with_pixels(info: codec.MediaInfo, px: np.ndarray) -> bytes:
-    """Encode an HPM1 object carrying explicit (annotated) pixels."""
-    import struct
-    import zlib
-
-    joined = "\f".join(info.pages).encode("utf-8")
-    header = codec._HEADER.pack(
-        codec.MAGIC, info.fmt.encode("ascii")[:8].ljust(8, b"\0"),
-        px.shape[1], px.shape[0], len(info.pages), info.flags, len(joined),
-    )
-    pixels = zlib.compress(px.astype(np.uint8).tobytes(), 6)
-    return header + joined + struct.pack("<I", 0) + pixels
-
-
-def decode_pixels(data: bytes) -> np.ndarray:
-    """Read back the actual pixel payload (annotated or rendered)."""
-    import struct
-    import zlib
-
-    info = codec.decode_media(data, verify_pixels=False)
-    off = codec._HEADER.size + len("\f".join(info.pages).encode("utf-8"))
-    (pad_len,) = struct.unpack_from("<I", data, off)
-    raw = zlib.decompress(data[off + 4 : len(data) - pad_len])
-    return np.frombuffer(raw, dtype=np.uint8).reshape(info.height, info.width)
+    return codec.encode_pixels(px, info.pages, info.fmt, info.flags)
 
 
 def make_grid(images: list[bytes], max_horizontal: int = 4) -> bytes:
@@ -194,7 +168,7 @@ def make_grid(images: list[bytes], max_horizontal: int = 4) -> bytes:
     if n == 0:
         return codec.encode_media("", width=1, height=1)
     cols = min(n, min(max_horizontal, math.ceil(math.sqrt(n))) or 1)
-    pixmaps = [decode_pixels(im) for im in images]
+    pixmaps = [codec.decode_pixels(im) for im in images]
     rows = math.ceil(n / cols)
     # grid index assignment (W2): h = i % cols, v = i // cols
     col_w = [0] * cols
@@ -211,5 +185,4 @@ def make_grid(images: list[bytes], max_horizontal: int = 4) -> bytes:
         ci, ri = i % cols, i // cols
         y, x = int(y_off[ri]), int(x_off[ci])
         canvas[y : y + pm.shape[0], x : x + pm.shape[1]] = pm
-    info = codec.MediaInfo("png", canvas.shape[1], canvas.shape[0], 1, 0, "", ("",), 0)
-    return _encode_with_pixels(info, canvas)
+    return codec.encode_pixels(canvas, ("",))

@@ -4,17 +4,21 @@ Re-expresses the reference's scan → normalize → extract → unify
 dataflow (reference manager.py:132-196 outer loop + per-document
 _normalized/_send) as one *narrow* Spark plan:
 
-    scan documents_spans → [optional repartition by hash(doc_id)]
-    → mapInPandas(normalize ∘ decode over media spans) → sink
+    scan documents_spans → mapInPandas(verify ∘ decode over media spans) → sink
 
 Design notes for 100 TB (SURVEY.md §4):
   * Zero shuffles in the hot path. The span array stays nested — one
     row per document end-to-end — so there is no explode/groupBy
     round-trip; the per-doc work is embarrassingly parallel exactly
-    like the reference's per-document loop, but across executors.
+    like the reference's per-document loop, but across executors. The
+    plan inherits the scan's partitioning; callers that want another
+    repartition their input.
   * All Python crossings are Arrow-batched (mapInPandas); batch size
     bounded by spark.sql.execution.arrow.maxRecordsPerBatch because
     rows carry media BLOBs.
+  * No service-limit min-fold: every normalize stage is text-invariant
+    (oversized media is resized, never rejected), so no limit can
+    change a span, and the kernel takes none.
   * Errors are span values (kind='error'), never exceptions — the
     reference's row-vs-job error policy (amazon.py:66-79).
   * Determinism: every stage is a pure function of the input row, so
@@ -33,15 +37,14 @@ Output contract (north_rule span-sequence equality):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corpus import SPAN_TYPE
-from ..kernels.decoder import decode_page
-from ..kernels.formats import KNOWN_SERVICES, fold_limits
+from ..kernels.decoder import page_text
 from ..kernels.preprocess import decode_media_text
 
 MEDIA_KINDS = ("page_image", "line_image", "word_image")
@@ -60,21 +63,17 @@ def extract_one(
     doc_id: str,
     spans: list,
     media: list,
-    max_size: Optional[int],
-    max_width: Optional[int],
-    max_height: Optional[int],
+    # ignored; kept so six-argument callers (the benchmark's pinning) still work
+    max_size=None, max_width=None, max_height=None,
 ) -> tuple[str, list, int, int]:
     """Pure per-document kernel — also runs sequentially on the driver
     as the reference path of the span-sequence-equality tests.
 
-    The limit parameters are retained in the signature (they are the
-    A1 min-fold contract and still select resize behavior for media
-    OUTPUT consumers) but the fused text path does not consume them:
-    the normalize stages are text-invariant by construction — the
-    reference RESIZES oversized media rather than rejecting it
-    (images.py:149-157), so no limit value can change the decoded
-    text or the error surface (proved by
-    test_fused_decode_equals_normalize_then_decode)."""
+    Media spans are verified and decoded by the fused I8+X9 kernel
+    (kernels/preprocess.decode_media_text): full verification,
+    identical error surface, no dead re-encode. Every normalize stage
+    is text-invariant, so the spans equal the normalize-then-decode
+    chain's (test_fused_decode_equals_normalize_then_decode)."""
     # ``media``/``spans`` may arrive as numpy arrays from Arrow — avoid
     # truthiness on them.
     media_map = {m["media_ref"]: m["content"] for m in (media if media is not None else [])}
@@ -89,56 +88,27 @@ def extract_one(
                             "media_ref": ref, "offset": offset})
                 n_errors += 1
                 continue
-            # fused I8+X9 (kernels/preprocess.decode_media_text): full
-            # verification, identical error surface, no dead re-encode —
-            # every normalize stage is text-invariant so the span output
-            # is byte-identical to the normalize-then-decode chain
-            # (asserted against it in test_extract_pipeline)
             text_out, err = decode_media_text(content)
             if err is not None:
                 out.append({"kind": "error", "text": err, "media_ref": ref, "offset": offset})
                 n_errors += 1
             else:
-                tr = decode_page(text_out)
-                out.append({"kind": "ocr", "text": tr.text, "media_ref": ref, "offset": offset})
+                out.append({"kind": "ocr", "text": page_text(text_out),
+                            "media_ref": ref, "offset": offset})
         else:
             out.append({"kind": kind, "text": text, "media_ref": ref, "offset": offset})
     return (doc_id, out, n_media, n_errors)
 
 
-def extract_documents(
-    df: DataFrame,
-    services: list[str] | tuple[str, ...] = KNOWN_SERVICES,
-    max_size: Optional[int] = None,
-    max_dimensions: Optional[tuple[int, int]] = None,
-    partitions: Optional[int] = None,
-) -> DataFrame:
-    """documents_spans(doc_id, spans, media) -> results.
-
-    Service limits min-fold (reference manager.py:104-123) happens on
-    the driver — it is a constant-fold over a 4-row dim table, not a
-    distributed agg — and the scalars are closed over by the UDF
-    (broadcast-by-closure).
-    """
-    folded_size, folded_dims = fold_limits(list(services))
-    if max_size is None:
-        max_size = folded_size
-    if max_dimensions is None:
-        max_dimensions = folded_dims
-    max_w, max_h = max_dimensions if max_dimensions else (None, None)
-
-    if partitions:
-        # Explicit doc-hash partitioning (north_rule). Only needed when
-        # the source's file-split parallelism is poor or skewed;
-        # otherwise the narrow plan inherits scan partitioning.
-        df = df.repartition(partitions, F.hash("doc_id"))
+def extract_documents(df: DataFrame) -> DataFrame:
+    """documents_spans(doc_id, spans, media) -> results."""
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
             rows = [
-                extract_one(d, s, m, max_size, max_w, max_h)
+                extract_one(d, s, m)
                 for d, s, m in zip(pdf["doc_id"], pdf["spans"], pdf["media"])
             ]
             yield pd.DataFrame(rows, columns=["doc_id", "spans", "n_media", "n_errors"])
@@ -153,14 +123,16 @@ def observed(results: DataFrame, observation=None) -> DataFrame:
     ``results`` (no extra pass/shuffle). Pass a ``pyspark.sql.
     Observation`` to read them on the driver after the action; with no
     argument a named observation is attached for QueryExecutionListener
-    consumers — at cluster scale this is how per-run lineage metrics
-    reach the driver for free."""
+    consumers. ``checkpoints.run_batch`` builds each batch's lineage row
+    from these metrics, doc range (``min_doc``/``max_doc``) included."""
     return results.observe(
         observation if observation is not None else "extract_metrics",
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_media").alias("media"),
         F.sum("n_errors").alias("errors"),
         F.max("n_media").alias("max_media_per_doc"),
+        F.min("doc_id").alias("min_doc"),
+        F.max("doc_id").alias("max_doc"),
     )
 
 

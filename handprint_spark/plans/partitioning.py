@@ -11,10 +11,6 @@ whose media count exceeds a threshold are chunked into one row per
 media-slice (a salted explode), extracted in parallel, and reassembled
 with a groupBy over only the skewed subset. The normal path stays
 shuffle-free; the shuffle touches only the heavy tail.
-
-``repartition_by_doc`` / ``salted_repartition`` are the generic
-explicit-partitioning entry points (hash(doc_id), optionally salted)
-the north_rule names.
 """
 
 from __future__ import annotations
@@ -26,23 +22,11 @@ from ..corpus import SPAN_TYPE
 from ..operators.extract import MEDIA_KINDS, extract_documents
 
 
-def repartition_by_doc(df: DataFrame, partitions: int) -> DataFrame:
-    return df.repartition(partitions, F.hash("doc_id"))
-
-
-def salted_repartition(df: DataFrame, partitions: int, salt_buckets: int = 8) -> DataFrame:
-    """Spread hot doc_id hash buckets with a deterministic salt column
-    derived from a second hash (no RNG — resume-safe)."""
-    salt = F.pmod(F.hash("doc_id", F.lit(0x5A17)), F.lit(salt_buckets))
-    return df.repartition(partitions, F.hash("doc_id"), salt)
-
-
 def extract_skew_aware(
     spans_with_media: DataFrame,
     media_per_chunk: int = 64,
     skew_threshold: int = 256,
     n_media_col: str | None = None,
-    **extract_kwargs,
 ) -> DataFrame:
     """Extraction with heavy-document splitting.
 
@@ -123,8 +107,8 @@ def extract_skew_aware(
         .drop("chunk", "_cum", "_nc", "_tagged", "_refs")
     )
 
-    extracted_normal = extract_documents(normal, **extract_kwargs)
-    extracted_chunks = extract_documents(chunked, **extract_kwargs)
+    extracted_normal = extract_documents(normal)
+    extracted_chunks = extract_documents(chunked)
 
     reassembled = (
         extracted_chunks.groupBy("doc_id")

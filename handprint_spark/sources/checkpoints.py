@@ -5,7 +5,7 @@ instead of re-calling services (manager.py:281-285, SURVEY.md §2.1 S8,
 §2.3 J3). At cluster scale that becomes:
 
     work list  =  input spans table  ANTI JOIN  results table (doc_id)
-    lineage    =  per-(batch, partition) row counts + metrics
+    lineage    =  one row per batch: doc/media/error counts + doc range
 
 so a re-run after any failure processes exactly the missing documents
 and appends — no partial-document state is possible because one doc is
@@ -16,7 +16,10 @@ On a real cluster both writes are a single Iceberg transaction
 leaves no committed rows and the anti-join re-selects its docs). The
 parquet stand-in here writes results first, lineage second; the
 anti-join is against *results*, so a crash between the two writes can
-only lose lineage rows, never duplicate results.
+only lose lineage rows, never duplicate results. The lineage row is
+built on the driver from the metrics the results append observed, so a
+batch is one extraction job plus its two writes; a batch with no
+documents writes no lineage row.
 
 Determinism makes resume exact: a re-extracted doc produces
 byte-identical spans (X9 purity), so resumed-and-restarted tables are
@@ -25,12 +28,15 @@ equal as sets — asserted by tests/test_resume.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..operators.extract import extract_documents
+from ..operators.extract import extract_documents, observed
 from . import table_sink
+
+LINEAGE_SCHEMA = (
+    "batch_id long, n_docs long, n_media long, n_errors long, min_doc string, max_doc string"
+)
 
 
 def pending_work(spark: SparkSession, spans_df: DataFrame, results_dir: str) -> DataFrame:
@@ -52,58 +58,31 @@ def run_batch(
     results_dir: str,
     lineage_dir: str,
     batch_id: int,
-    **extract_kwargs,
 ) -> dict:
     """One resumable batch: anti-join → extract → append results →
-    append per-partition lineage. Returns batch metrics.
+    append the batch's lineage row. Returns batch metrics.
 
     Steady-state I/O contract (the shape that must hold at 10^12
-    rows): ONE read of the input, ONE write of results, ONE write of
-    lineage, ZERO reads of the (ever-growing) results table. The
-    per-partition lineage aggregates the batch's own (cached) output,
-    never a rescan of the sink, and the collected lineage rows (one
-    per partition — driver-small by construction) also supply the
-    return metrics, so no second aggregation pass exists at all.
+    rows): ONE read of the input, ONE write of results, at most ONE
+    write of lineage, ZERO reads of the (ever-growing) results table. The
+    lineage and the returned metrics come from an ``Observation`` on
+    the results append itself, so the batch runs the plan once.
     ``results_dir``/``lineage_dir`` may be parquet paths or catalog
     table identifiers (table_sink) — with an Iceberg catalog the two
     appends become one atomic transaction."""
-    todo = pending_work(spark, spans_df, results_dir)
-    results = (
-        extract_documents(todo, **extract_kwargs)
+    obs = Observation()
+    results = observed(
+        extract_documents(pending_work(spark, spans_df, results_dir))
         .withColumn("batch_id", F.lit(batch_id))
-        .withColumn("partition_id", F.spark_partition_id())
+        .withColumn("partition_id", F.spark_partition_id()),
+        obs,
     )
-    # cache so the results append reads this batch's output instead of
-    # recomputing it; results rows are text spans (no media blobs).
-    results.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # Lineage FIRST, append second: the plan under `results`
-        # anti-joins the results sink, so any recomputation after the
-        # append would see its own output and resolve to empty. Taking
-        # the lineage snapshot (which also materializes the cache)
-        # before the sink mutates keeps every recomputation of this
-        # plan equal to what gets written.
-        lineage_rows = (
-            results.groupBy("batch_id", "partition_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_media").alias("n_media"),
-                F.sum("n_errors").alias("n_errors"),
-                F.min("doc_id").alias("min_doc"),
-                F.max("doc_id").alias("max_doc"),
-            )
-            .collect()  # one row per partition: driver-small
+    table_sink.append(results, results_dir)
+    m = obs.get
+    docs, media, errors = m["docs"], int(m["media"] or 0), int(m["errors"] or 0)
+    if docs:
+        lineage = spark.createDataFrame(
+            [(batch_id, docs, media, errors, m["min_doc"], m["max_doc"])], LINEAGE_SCHEMA
         )
-        table_sink.append(results, results_dir)  # reads the cache
-    finally:
-        results.unpersist()
-    if lineage_rows:
-        lineage = spark.createDataFrame(lineage_rows)
         table_sink.append(lineage, lineage_dir)
-
-    return {
-        "batch_id": batch_id,
-        "docs": sum(r["n_docs"] for r in lineage_rows),
-        "media": int(sum(r["n_media"] for r in lineage_rows)),
-        "errors": int(sum(r["n_errors"] for r in lineage_rows)),
-    }
+    return {"batch_id": batch_id, "docs": docs, "media": media, "errors": errors}

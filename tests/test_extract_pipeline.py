@@ -12,14 +12,11 @@ from handprint_spark.corpus import (
     is_skewed,
     load_documents_spans,
 )
-from handprint_spark.kernels.formats import fold_limits
 from handprint_spark.operators.extract import (
     extract_documents,
     extract_one,
     extracted_text,
 )
-
-MAX_SIZE, MAX_DIMS = fold_limits(["amazon-textract", "amazon-rekognition", "google", "microsoft"])
 
 
 def _reference_results(sf_dir):
@@ -29,7 +26,7 @@ def _reference_results(sf_dir):
     ref = {}
     for did, text in docs:
         d, spans, media = build_doc(did, text)
-        ref[d] = extract_one(d, spans, media, MAX_SIZE, *MAX_DIMS)[1]
+        ref[d] = extract_one(d, spans, media)[1]
     return ref
 
 
@@ -59,8 +56,10 @@ def test_span_sequence_equality(results, sf_tiny):
 def test_distribution_invariance(spark, sf_tiny, results):
     """Same input at a different partitioning must produce identical
     spans (sandbox stand-in for N vs 4N executors)."""
-    df = load_documents_spans(spark, sf_tiny)
-    alt = extract_documents(df, partitions=7).collect()
+    from pyspark.sql import functions as F
+
+    df = load_documents_spans(spark, sf_tiny).repartition(7, F.hash("doc_id"))
+    alt = extract_documents(df).collect()
     base = {r.doc_id: _span_tuples_from_row(r) for r in results}
     assert len(alt) == len(base)
     for row in alt:
@@ -198,6 +197,30 @@ def test_fused_decode_equals_normalize_then_decode():
         assert fused_err == chain_err
         if fused_err is None:
             assert fused_text == chain_text
+
+
+def test_ocr_text_equals_decode_page_text():
+    """extract_one's OCR span text is decode_page's text, for page text
+    with \\r\\n, \\r, \\x0b and \\u2028 line breaks and a trailing
+    newline (no form feed: it is HPM1's page separator)."""
+    from handprint_spark.kernels import codec
+    from handprint_spark.kernels.decoder import decode_page
+
+    pages = [
+        "crlf one\r\ncrlf two",
+        "cr one\rcr two",
+        "vt one\x0bvt two",
+        "ls one\u2028ls two",
+        "trailing newline\n",
+        "mixed\r\nall\rforms\x0bhere\u2028end\n",
+    ]
+    for i, text in enumerate(pages):
+        ref = f"m{i}"
+        spans = [{"kind": "line_image", "text": "", "media_ref": ref, "offset": 0}]
+        media = [{"media_ref": ref, "content": codec.encode_media(text)}]
+        (span,) = extract_one("d", spans, media)[1]
+        assert span["kind"] == "ocr"
+        assert span["text"] == decode_page(text).text, repr(text)
 
 
 def test_spanify_empty_text_matches_python_twin(spark):

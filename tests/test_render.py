@@ -4,8 +4,9 @@ import numpy as np
 import pytest
 
 from handprint_spark.kernels import codec
+from handprint_spark.kernels.codec import decode_pixels
 from handprint_spark.kernels.decoder import decode_page
-from handprint_spark.kernels.render import annotate, decode_pixels, make_grid
+from handprint_spark.kernels.render import annotate, make_grid
 
 
 def _page(text="alpha beta\ngamma", w=160, h=64):
@@ -146,8 +147,8 @@ def test_doc_grids_tiles_in_natural_reading_order(spark):
     scrambled any document with 10+ crops. Pin with 12 distinct-dim
     crops: the grid's total size reproduces only under numeric order
     and the first tile's pixels are line-0's."""
-    from handprint_spark.kernels.codec import encode_media
-    from handprint_spark.kernels.render import decode_pixels, make_grid
+    from handprint_spark.kernels.codec import decode_pixels, encode_media
+    from handprint_spark.kernels.render import make_grid
     from handprint_spark.operators.render import doc_grids
 
     crops = [

@@ -104,18 +104,35 @@ def test_run_batch_never_rescans_results_sink(spark, sf_tiny, dirs, monkeypatch)
 
 
 def test_lineage_metrics(spark, sf_tiny, dirs):
+    """One lineage row per batch, equal to the aggregates of that
+    batch's results rows; a zero-doc batch writes no row."""
     results_dir, lineage_dir = dirs
     spans = _spans(spark, sf_tiny)
-    run_batch(spark, spans, results_dir, lineage_dir, batch_id=7)
+    m7 = run_batch(spark, spans.limit(45), results_dir, lineage_dir, batch_id=7)
+    m8 = run_batch(spark, spans, results_dir, lineage_dir, batch_id=8)
+    m9 = run_batch(spark, spans, results_dir, lineage_dir, batch_id=9)
+    assert (m7["docs"], m8["docs"], m9["docs"]) == (45, spans.count() - 45, 0)
     lineage = spark.read.parquet(lineage_dir).collect()
-    assert lineage
-    assert all(r.batch_id == 7 for r in lineage)
-    assert sum(r.n_docs for r in lineage) == spans.count()
-    res = spark.read.parquet(results_dir)
-    total_media = res.groupBy().sum("n_media").collect()[0][0]
-    assert sum(r.n_media for r in lineage) == total_media
-    # per-partition rows carry doc ranges for audit
-    assert all(r.min_doc <= r.max_doc for r in lineage)
+    assert sorted(r.batch_id for r in lineage) == [7, 8]
+    per_batch = {
+        r.batch_id: r
+        for r in spark.read.parquet(results_dir)
+        .groupBy("batch_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_media").alias("n_media"),
+            F.sum("n_errors").alias("n_errors"),
+            F.min("doc_id").alias("min_doc"),
+            F.max("doc_id").alias("max_doc"),
+        )
+        .collect()
+    }
+    for r in lineage:
+        exp = per_batch[r.batch_id]
+        assert (r.n_docs, r.n_media, r.n_errors, r.min_doc, r.max_doc) == (
+            exp.n_docs, exp.n_media, exp.n_errors, exp.min_doc, exp.max_doc
+        )
+    assert {r.batch_id: r.n_docs for r in lineage} == {7: m7["docs"], 8: m8["docs"]}
 
 
 def test_curation_run_is_resumable(spark, sf_tiny, tmp_path):

@@ -18,7 +18,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # projection-class registry entries (zero/near-zero-shuffle feature
 # and gate queries whose bench.py rows are scan-bound)

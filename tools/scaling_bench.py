@@ -176,20 +176,6 @@ def main():
         "scaling_efficiency_median": round(med_eff, 3),
         "passes_0_8": eff >= 0.8,
     }
-    # Contemporaneous Spark-free host ceiling (tools/host_probe.py):
-    # what a pure busy loop scales at N->4N on this shared VM right
-    # now. Published next to every pair so a sub-0.8 Spark reading can
-    # be attributed (or not) to the host at the moment of measurement.
-    try:
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from host_probe import level as _probe_level
-
-        tp_p_low = _probe_level(n, 2000, rounds=2)
-        tp_p_high = _probe_level(4 * n, 2000, rounds=2)
-        result["host_ceiling_efficiency"] = round((tp_p_high / tp_p_low) / 4, 3)
-    except Exception as exc:  # probe failure must never mask the measurement
-        result["host_ceiling_efficiency"] = None
-        result["host_probe_error"] = str(exc)[:200]
     print(json.dumps(result))
 
 
