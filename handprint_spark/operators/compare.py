@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from ..corpus import split_lines
 from ..kernels.textcmp import align_lines, text_comparison
+from .extract import forget_zip_finders
 
 LINE_STRUCT = T.StructType(
     [
@@ -52,6 +53,7 @@ def ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(T.StringType())
     def gt_text(texts: pd.Series) -> pd.Series:
+        forget_zip_finders()
         return texts.map(lambda t: "\n".join(split_lines(t)))
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -63,6 +65,7 @@ def ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _align_udf(relaxed: bool):
     @F.pandas_udf(T.ArrayType(LINE_STRUCT))
     def align(htr: pd.Series, gt: pd.Series) -> pd.Series:
+        forget_zip_finders()
         out = []
         for h, g in zip(htr, gt):
             rows = align_lines(h or "", g or "", relaxed)
@@ -115,6 +118,7 @@ def comparison_tsv(htr_df: DataFrame, gt_df: DataFrame, relaxed: bool = False) -
 
     @F.pandas_udf(T.StringType())
     def tsv(htr: pd.Series, gt: pd.Series) -> pd.Series:
+        forget_zip_finders()
         return pd.Series(
             [text_comparison(h or "", g or "", relaxed) for h, g in zip(htr, gt)]
         )

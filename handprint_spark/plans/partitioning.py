@@ -7,10 +7,16 @@ median span count; real corpora have 1000x outliers) pins one task
 while its 10^3 media spans decode serially.
 
 ``extract_skew_aware`` fixes that by *splitting heavy rows*: documents
-whose media count exceeds a threshold are chunked into one row per
-media-slice (a salted explode), extracted in parallel, and reassembled
-with a groupBy over only the skewed subset. The normal path stays
-shuffle-free; the shuffle touches only the heavy tail.
+whose media count exceeds a threshold become one row per slice of k
+media spans, in media_ref order, each carrying only the media objects
+in its slice's ref range (the document's text spans ride in chunk 0).
+The chunk rows are hash-repartitioned by (doc_id, chunk), so one
+document's chunks are extracted in several tasks, then reassembled
+with a groupBy over only the heavy subset. Building the chunks sorts
+a document's media spans and media once each, then per chunk takes one
+positional slice and makes one ref comparison per media object: no
+per-media membership test over the chunk's spans. The normal path
+stays shuffle-free; the shuffles touch only the heavy tail.
 """
 
 from __future__ import annotations
@@ -22,6 +28,47 @@ from ..corpus import SPAN_TYPE
 from ..operators.extract import MEDIA_KINDS, extract_documents
 
 
+def _le(a: str, b: str) -> str:
+    """``a <= b`` on media refs with null sorting lowest (sort_array's
+    ascending order), so null refs chunk like any other ref."""
+    return f"({a} IS NULL OR ({b} IS NOT NULL AND {a} <= {b}))"
+
+
+def _chunk_rows(heavy: DataFrame, media_per_chunk: int) -> DataFrame:
+    """(doc_id, spans, media) rows, one per chunk of each heavy doc,
+    hash-partitioned by (doc_id, chunk) over defaultParallelism
+    partitions (an explicit count, which AQE does not coalesce)."""
+    k = media_per_chunk
+    kinds_sql = ", ".join(f"'{m}'" for m in MEDIA_KINDS)
+    # sort_array over (ref, position, object) is a stable sort by ref:
+    # duplicate refs keep their input order, so extract_one's last-wins
+    # lookup picks the same object as on the narrow path.
+    by_ref = ("transform(sort_array(transform({a}, (x, i) ->"
+              " named_struct('r', x.media_ref, 'i', i, 'x', x))), t -> t.x)")
+    is_media = f"coalesce(s.kind in ({kinds_sql}), false)"
+    lo = f"get(_ms, c * {k}).media_ref"
+    hi = f"get(_ms, least((c + 1) * {k}, size(_ms)) - 1).media_ref"
+    chunks = f"""
+        transform(sequence(0, greatest(cast(ceil(size(_ms) / {k}) as int), 1) - 1), c -> struct(
+          c as chunk,
+          concat(if(c = 0, _text, array()), slice(_ms, c * {k} + 1, {k})) as spans,
+          filter(_media, m -> {_le(lo, 'm.media_ref')} and {_le('m.media_ref', hi)}) as media))
+    """
+    n_partitions = heavy.sparkSession.sparkContext.defaultParallelism
+    return (
+        heavy.select(
+            "doc_id",
+            F.expr(f"filter(spans, s -> not {is_media})").alias("_text"),
+            F.expr(by_ref.format(a=f"filter(spans, s -> {is_media})")).alias("_ms"),
+            F.expr(by_ref.format(a="media")).alias("_media"),
+        )
+        .select("doc_id", F.explode(F.expr(chunks)).alias("_c"))
+        .select("doc_id", "_c.chunk", "_c.spans", "_c.media")
+        .repartition(n_partitions, "doc_id", "chunk")
+        .drop("chunk")
+    )
+
+
 def extract_skew_aware(
     spans_with_media: DataFrame,
     media_per_chunk: int = 64,
@@ -31,10 +78,10 @@ def extract_skew_aware(
     """Extraction with heavy-document splitting.
 
     Rows with <= skew_threshold media run the plain narrow path.
-    Heavier rows are split into ceil(n/media_per_chunk) chunk rows
-    (spans + their media sliced together), extracted chunk-wise in
-    parallel, then reassembled per doc_id (array_sort by offset keeps
-    span order canonical). Output schema == extract_documents.
+    Heavier rows are split into chunk rows, repartitioned by
+    (doc_id, chunk) so their chunks extract in parallel, then
+    reassembled per doc_id (array_sort by offset keeps span order
+    canonical). Output schema == extract_documents.
 
     ``n_media_col``: name of a materialized media-count column on the
     input table. The heavy/normal split is two filters over the same
@@ -46,69 +93,21 @@ def extract_skew_aware(
     parquet row-group pruning: the heavy scan skips every
     all-normal row group, which is almost all of them.
 
-    Chunk membership is derived from the spans themselves, for ANY
-    span/media interleave (not just the corpus's text+media-per-line
-    2:1 layout): span j belongs to chunk floor(m_before(j) / k), where
-    m_before(j) counts media-kind spans at offsets strictly before j —
-    so each chunk holds <= k media spans plus the non-media spans that
-    precede them, and trailing non-media spans clamp into the last
-    chunk. A chunk's media objects are selected by media_ref
-    membership in its own media spans, never by array position.
+    Chunk membership holds for ANY span/media interleave and order:
+    a heavy doc's media spans are sorted by media_ref, and chunk c is
+    their c-th slice of k = media_per_chunk; its media objects are
+    those whose ref lies in the slice's [first, last] ref range (the
+    media are sorted stably by ref once, so a duplicate ref's last
+    object still wins). All non-media spans ride in chunk 0, which
+    extract_one passes through unchanged; a heavy doc with no media
+    spans is one chunk.
     """
     n_media = F.col(n_media_col) if n_media_col else F.size("media")
     normal = spans_with_media.filter(n_media <= skew_threshold)
     heavy = spans_with_media.filter(n_media > skew_threshold)
 
-    n_chunks = F.ceil(n_media / F.lit(media_per_chunk)).cast("int")
-    k = media_per_chunk
-    kinds_sql = ", ".join(f"'{m}'" for m in MEDIA_KINDS)
-
-    ordered = F.array_sort(
-        F.col("spans"),
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1)
-        .otherwise(0),
-    )
-    # m_before per span index: one O(n) fold building the prefix-count
-    # array (Catalyst has no scan primitive; the concat-accumulate is
-    # the standard form and runs only on the rare heavy rows).
-    cum = F.expr(
-        f"""
-        aggregate(spans,
-                  struct(cast(array() as array<int>) as cum, cast(0 as int) as c),
-                  (acc, s) -> struct(
-                    concat(acc.cum, array(acc.c)),
-                    acc.c + if(s.kind in ({kinds_sql}), 1, 0)),
-                  acc -> acc.cum)
-        """
-    )
-    # spans tagged with their chunk id (clamped so trailing non-media
-    # spans land in the last chunk)
-    tagged = F.expr(
-        f"""
-        zip_with(spans, _cum, (s, m) ->
-          struct(s as s, least(cast(m / {k} as int), _nc - 1) as chunk))
-        """
-    )
-    chunk_spans = F.expr("transform(filter(_tagged, t -> t.chunk = chunk), t -> t.s)")
-    chunk_refs = F.expr(
-        f"transform(filter(spans, s -> s.kind in ({kinds_sql})), s -> s.media_ref)"
-    )
-    chunk_media = F.expr("filter(media, m -> array_contains(_refs, m.media_ref))")
-    chunked = (
-        heavy.withColumn("spans", ordered)
-        .withColumn("_cum", cum)
-        .withColumn("_nc", n_chunks)
-        .withColumn("_tagged", tagged)
-        .withColumn("chunk", F.explode(F.sequence(F.lit(0), F.col("_nc") - 1)))
-        .withColumn("spans", chunk_spans.cast(SPAN_TYPE))
-        .withColumn("_refs", chunk_refs)
-        .withColumn("media", chunk_media)
-        .drop("chunk", "_cum", "_nc", "_tagged", "_refs")
-    )
-
     extracted_normal = extract_documents(normal)
-    extracted_chunks = extract_documents(chunked)
+    extracted_chunks = extract_documents(_chunk_rows(heavy, media_per_chunk))
 
     reassembled = (
         extracted_chunks.groupBy("doc_id")

@@ -26,15 +26,24 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 64
 
 
+def _default_driver_memory() -> str:
+    """min(16g, half of physical RAM): the 16g cap is the heap the
+    engine was tuned with; half of RAM leaves room for the Python
+    workers on a small host."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024 * 1024)
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "handprint-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus = str(len(os.sched_getaffinity(0)))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", host_cpus)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus if cpus.isdigit() else "32"
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus if cpus.isdigit() else host_cpus
     ))
     builder = SparkSession.builder.appName(app_name)
     if master != "inherit":
@@ -64,7 +73,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()))
         # This sandbox's virtualized CPU advertises AVX-512 but the
         # JIT'd avx3 arraycopy stubs SIGSEGV under load (observed:
         # hs_err crashes in jlong_disjoint_arraycopy_avx3 at 16+

@@ -16,6 +16,7 @@ from handprint_spark.operators.extract import (
     extract_documents,
     extract_one,
     extracted_text,
+    forget_zip_finders,
 )
 
 
@@ -239,3 +240,32 @@ def test_spanify_empty_text_matches_python_twin(spark):
         _, spans, media = build_doc(doc_id, text)
         assert got[str(doc_id)] == (len(spans), len(media)), doc_id
     assert got["101"] == (0, 0) and got["104"] == (2, 1)
+
+
+def test_forget_zip_finders_leaves_zip_importable(tmp_path, monkeypatch):
+    """The per-task helper drops every zipimporter from
+    sys.path_importer_cache, and a module not yet imported from the
+    same zip still imports afterwards."""
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zipmod_first.py", "VALUE = 1\n")
+        zf.writestr("zipmod_second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        import zipmod_first
+
+        assert zipmod_first.VALUE == 1
+        assert isinstance(sys.path_importer_cache[str(archive)], zipimport.zipimporter)
+        forget_zip_finders()
+        assert not any(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+        import zipmod_second
+
+        assert zipmod_second.VALUE == 2
+    finally:
+        sys.modules.pop("zipmod_first", None)
+        sys.modules.pop("zipmod_second", None)

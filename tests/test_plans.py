@@ -3,6 +3,8 @@ just plans that pass. Verifies predicate pushdown reaches the parquet
 scan, small dims broadcast, the extraction pipeline is shuffle-free,
 and skew-aware extraction returns identical results."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +14,7 @@ from handprint_spark.operators.relational import (
     q_j1_broadcast_join,
     q_s2_whitelist_filter,
 )
-from handprint_spark.plans.partitioning import extract_skew_aware
+from handprint_spark.plans.partitioning import _chunk_rows, extract_skew_aware
 
 
 def plan_str(df, mode="formatted"):
@@ -90,7 +92,7 @@ def test_skew_aware_general_layout(spark):
         spans.append({"kind": "line_image", "text": "", "media_ref": ref, "offset": off})
         off += 1
         media.append({"media_ref": ref, "content": encode_line_media("gdoc", i, f"w{i}")})
-    # trailing text spans after the last media (must clamp to last chunk)
+    # trailing text spans after the last media (they ride in chunk 0)
     spans.append({"kind": "text", "text": "tail", "media_ref": "", "offset": off})
     schema = T.StructType(
         [
@@ -114,6 +116,136 @@ def test_skew_split_actually_triggers(spark, sf_tiny):
     spans = load_documents_spans(spark, sf_tiny)
     heavy = spans.filter(F.size("media") > 40).count()
     assert heavy >= 1
+
+
+def _heavy_doc(spark, spans, media):
+    from handprint_spark.corpus import MEDIA_TYPE, SPAN_TYPE
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("spans", SPAN_TYPE),
+            T.StructField("media", MEDIA_TYPE),
+        ]
+    )
+    return spark.createDataFrame([("hdoc", spans, media)], schema)
+
+
+def _ref(i):
+    return f"hdoc/line-{i:02d}"
+
+
+def _media_span(ref, off):
+    return {"kind": "line_image", "text": "", "media_ref": ref, "offset": off}
+
+
+def _text_span(text, off):
+    return {"kind": "text", "text": text, "media_ref": "", "offset": off}
+
+
+def _media_obj(i, word="w"):
+    from handprint_spark.corpus import encode_line_media
+
+    return {"media_ref": _ref(i), "content": encode_line_media("hdoc", i, f"{word}{i}")}
+
+
+def _case_media_reordered():
+    spans = [_media_span(_ref(i), i) for i in range(10)]
+    return spans, [_media_obj(i) for i in (7, 2, 9, 0, 5, 1, 8, 3, 6, 4)]
+
+
+def _case_missing_media():
+    spans = [_media_span(_ref(i), i) for i in range(10)]
+    return spans, [_media_obj(i) for i in range(10) if i != 4]
+
+
+def _case_duplicate_ref_last_wins():
+    spans = [_media_span(_ref(i), i) for i in range(10)]
+    return spans, [_media_obj(i) for i in range(10)] + [_media_obj(5, word="later")]
+
+
+def _case_ref_order_not_offset_order():
+    # refs descend as offsets ascend, so every chunk boundary in ref
+    # order cuts across offset order
+    spans = [_media_span(_ref(9 - i), i) for i in range(10)]
+    return spans, [_media_obj(i) for i in range(10)]
+
+
+def _case_text_around_media():
+    spans, off = [_text_span("head", 0), _text_span("head2", 1)], 2
+    for i in range(10):
+        spans += [_media_span(_ref(i), off), _text_span(f"between-{i}", off + 1)]
+        off += 2
+    spans.append(_text_span("tail", off))
+    return spans, [_media_obj(i) for i in range(10)]
+
+
+def _case_null_refs():
+    # a null ref sorts lowest; the narrow path still looks it up
+    spans = [_media_span(_ref(i), i) for i in range(9)] + [_media_span(None, 9)]
+    media = [_media_obj(i) for i in range(9)] + [dict(_media_obj(9), media_ref=None)]
+    return spans, media
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _case_media_reordered,
+        _case_missing_media,
+        _case_duplicate_ref_last_wins,
+        _case_ref_order_not_offset_order,
+        _case_text_around_media,
+        _case_null_refs,
+    ],
+)
+def test_skew_aware_chunking_equals_narrow(spark, case):
+    """A heavy doc chunked by media_ref ranges (k=3 over 10 media
+    spans: 4 chunks) gives the narrow path's result, however its
+    media array, refs, offsets and text spans are arranged."""
+    spans, media = case()
+    df = _heavy_doc(spark, spans, media)
+    key = lambda r: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],  # noqa: E731
+                     r.n_media, r.n_errors)
+    plain = extract_documents(df).collect()[0]
+    skew = extract_skew_aware(df, media_per_chunk=3, skew_threshold=2).collect()
+    assert len(skew) == 1
+    assert key(skew[0]) == key(plain)
+
+
+def test_skew_aware_duplicate_ref_picks_later_object(spark):
+    """The case above compares with the narrow path; this pins what
+    the narrow path does: the later of two objects sharing a ref wins."""
+    spans, media = _case_duplicate_ref_last_wins()
+    df = _heavy_doc(spark, spans, media)
+    row = extract_skew_aware(df, media_per_chunk=3, skew_threshold=2).collect()[0]
+    texts = {s.media_ref: s.text for s in row.spans}
+    assert texts["hdoc/line-05"] == "later5"
+    assert row.n_errors == 0
+
+
+def test_skew_chunks_spread_over_partitions(spark):
+    """One heavy doc's chunk rows (12 media, k=2: 6 chunks) land in two
+    or more partitions on local[4], behind an Exchange on
+    (doc_id, chunk) that sits before the Python stage."""
+    spans = [_media_span(_ref(i), i) for i in range(12)]
+    media = [_media_obj(i) for i in range(12)]
+    chunks = _chunk_rows(_heavy_doc(spark, spans, media), 2)
+    assert chunks.count() == 6
+    parts = {r.p for r in chunks.select(F.spark_partition_id().alias("p")).collect()}
+    assert len(parts) >= 2
+
+    plan = plan_str(extract_skew_aware(_heavy_doc(spark, spans, media),
+                                       media_per_chunk=2, skew_threshold=2), "simple")
+    lines = plan.splitlines()
+    at = [i for i, line in enumerate(lines)
+          if re.search(r"Exchange hashpartitioning\(doc_id#\d+, chunk#\d+, \d+\), "
+                       r"REPARTITION_BY_NUM", line)]
+    assert len(at) == 1
+    # the heavy branch prints last and top-down: its Python stage sits
+    # above the Exchange, and nothing below it crosses into Python
+    assert any("MapInPandas" in line for line in lines[at[0] - 2:at[0]])
+    assert not any("MapInPandas" in line for line in lines[at[0]:])
 
 
 def test_minhash_sigs_single_exchange(spark, sf_small):
