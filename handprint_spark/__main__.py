@@ -12,8 +12,8 @@ Option-by-option mapping (reference flag -> this engine):
                                         identically
   -o  output directory               -> table-sink root (parquet dirs;
                                         on a cluster: catalog tables)
-  -t  threads (default #cores/2)     -> local[N] / session parallelism
-                                        (C14: same default rule)
+  -t  threads (default: all cores)   -> local[N] / session parallelism
+                                        (get_spark's CPU-affinity default)
   -n  confidence threshold           -> F1 score filter (images.py:256)
   -d  display annotations            -> F2/render display matrix
   -m  text-move x,y                  -> annotation shift (render)
@@ -105,7 +105,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("-s", "--services", default="all",
                    help='comma list of services (default: "all")')
     p.add_argument("-t", "--threads", type=int, default=None,
-                   help="parallelism (default: half the cores, like the reference)")
+                   help="parallelism (default: every core this process may run on)")
     p.add_argument("-V", "--version", action="store_true",
                    help="print version and exit")
     p.add_argument("-x", "--text-color", default=None,
@@ -209,10 +209,12 @@ def run_cli(argv: list[str] | None = None) -> int:
     # contains('spark.master') is always False); spark-submit's
     # PythonRunner is detected by the gateway env it launches the
     # driver script with, and get_spark("inherit") then leaves the
-    # JVM's own spark.master untouched.
-    threads = args.threads or max(1, (os.cpu_count() or 2) // 2)
-    under_submit = "PYSPARK_GATEWAY_PORT" in os.environ
-    master = "inherit" if under_submit else f"local[{threads}]"
+    # JVM's own spark.master untouched. Without -t, get_spark sizes
+    # local[N] to the cores in this process's CPU affinity mask.
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        master = "inherit"
+    else:
+        master = f"local[{args.threads}]" if args.threads else None
     spark = get_spark(app_name="handprint-spark-cli", master=master)
     spark.sparkContext.setLogLevel("ERROR")
 

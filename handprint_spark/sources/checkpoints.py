@@ -17,9 +17,12 @@ leaves no committed rows and the anti-join re-selects its docs). The
 parquet stand-in here writes results first, lineage second; the
 anti-join is against *results*, so a crash between the two writes can
 only lose lineage rows, never duplicate results. The lineage row is
-built on the driver from the metrics the results append observed, so a
-batch is one extraction job plus its two writes; a batch with no
-documents writes no lineage row.
+built on the driver from the metrics the results append observed and
+committed by ``table_sink.append_row``: on a path, a one-row parquet
+file the driver writes and renames into place (no Spark job); on a
+table, a JVM literal-row append (no Python worker). So the extraction
+is a batch's only Python stage; a batch with no documents writes no
+lineage row.
 
 Determinism makes resume exact: a re-extracted doc produces
 byte-identical spans (X9 purity), so resumed-and-restarted tables are
@@ -64,9 +67,11 @@ def run_batch(
 
     Steady-state I/O contract (the shape that must hold at 10^12
     rows): ONE read of the input, ONE write of results, at most ONE
-    write of lineage, ZERO reads of the (ever-growing) results table. The
+    lineage row, ZERO reads of the (ever-growing) results table. The
     lineage and the returned metrics come from an ``Observation`` on
-    the results append itself, so the batch runs the plan once.
+    the results append itself, so the batch runs the plan once. The
+    lineage row adds no Spark job into a path sink (a driver-side file
+    commit) and one JVM literal append into a table.
     ``results_dir``/``lineage_dir`` may be parquet paths or catalog
     table identifiers (table_sink) — with an Iceberg catalog the two
     appends become one atomic transaction."""
@@ -81,8 +86,6 @@ def run_batch(
     m = obs.get
     docs, media, errors = m["docs"], int(m["media"] or 0), int(m["errors"] or 0)
     if docs:
-        lineage = spark.createDataFrame(
-            [(batch_id, docs, media, errors, m["min_doc"], m["max_doc"])], LINEAGE_SCHEMA
-        )
-        table_sink.append(lineage, lineage_dir)
+        table_sink.append_row(spark, (batch_id, docs, media, errors, m["min_doc"], m["max_doc"]),
+                              LINEAGE_SCHEMA, lineage_dir)
     return {"batch_id": batch_id, "docs": docs, "media": media, "errors": errors}

@@ -17,13 +17,28 @@ runtime jars, so the sink routes by target *shape*:
 
 Only the writer changes per target; every operator upstream is
 unchanged (they produce DataFrames, the sink decides durability).
+
+``append_row`` commits one driver-side row (a batch's lineage) without
+a Python stage: on a path the driver writes it as a parquet file
+through the session's Hadoop ``FileSystem`` (no Spark job at all); on
+a catalog table it appends a JVM literal row.
+
+``load`` tests existence (``FileSystem`` on paths, ``tableExists`` on
+tables) instead of catching the failed analysis: an analysis failure
+also makes the ``Observation`` listener log a long JVM stack trace.
 """
 
 from __future__ import annotations
 
+import uuid
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 from pyspark.sql.utils import AnalysisException
 
 
@@ -49,11 +64,54 @@ def append(df: DataFrame, target: str) -> None:
         df.write.mode("append").saveAsTable(target)
 
 
-def load(spark: SparkSession, target: str) -> Optional[DataFrame]:
-    """Read the sink target; None when it does not exist yet."""
+def _fs_path(spark: SparkSession, target: str, *children: str):
+    """(Hadoop FileSystem, Path) of ``target`` joined with ``children``,
+    under the session's Hadoop configuration — any Hadoop URI."""
+    fs_api = spark._jvm.org.apache.hadoop.fs
+    path = fs_api.Path(target)
+    for child in children:
+        path = fs_api.Path(path, child)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def append_row(spark: SparkSession, values: tuple, schema: str, target: str) -> None:
+    """Append one row (``values`` in the order of the DDL ``schema``)
+    to ``target``. On a path the driver writes a one-row parquet file
+    as ``.part-<uuid>.parquet.tmp`` and renames it to
+    ``part-<uuid>.parquet``, so readers, which skip dot-files, never
+    see a partial file. On a table it appends a JVM literal row; no
+    Python worker runs in either case."""
+    struct = StructType.fromDDL(schema)
+    if not is_path(target):
+        row = spark.range(1, numPartitions=1).select(
+            *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(values, struct.fields)])
+        append(row, target)
+        return
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table([[v] for v in values], schema=to_arrow_schema(struct)), buf)
+    name = f"part-{uuid.uuid4()}.parquet"
+    fs, tmp = _fs_path(spark, target, f".{name}.tmp")
+    out = fs.create(tmp, False)
     try:
-        if is_path(target):
-            return spark.read.parquet(target)
-        return spark.read.table(target)
-    except AnalysisException:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    _, final = _fs_path(spark, target, name)
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not commit {final.toString()}")
+
+
+def load(spark: SparkSession, target: str) -> Optional[DataFrame]:
+    """Read the sink target; None when it does not exist yet. A
+    directory with no visible entry (only the ``_temporary`` of a
+    crashed first write, say) does not exist yet either."""
+    if not is_path(target):
+        return spark.read.table(target) if spark.catalog.tableExists(target) else None
+    fs, path = _fs_path(spark, target)
+    if not fs.exists(path):
         return None
+    if fs.getFileStatus(path).isDirectory():
+        _, visible = _fs_path(spark, target, "[!._]*")
+        if not fs.globStatus(visible):
+            return None
+    return spark.read.parquet(target)

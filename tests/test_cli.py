@@ -53,6 +53,33 @@ def test_add_creds_is_na_but_validates(tmp_path, capsys):
     assert code == ExitCode.file_error
 
 
+def test_threads_default_is_get_spark_default(sf_tiny, tmp_path, monkeypatch):
+    """Without -t the CLI leaves the master to get_spark (every core in
+    the CPU affinity mask); -t N asks for local[N]; under spark-submit
+    the submitted master is inherited."""
+    from handprint_spark import session
+
+    class Started(Exception):
+        pass
+
+    masters = []
+
+    def fake_get_spark(app_name, master=None, shuffle_partitions=None):
+        masters.append(master)
+        raise Started
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    out = str(tmp_path / "out")
+    for argv in (["-o", out, sf_tiny], ["-o", out, "-t", "3", sf_tiny]):
+        with pytest.raises(Started):
+            run_cli(argv)
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    with pytest.raises(Started):
+        run_cli(["-o", out, "-t", "3", sf_tiny])
+    assert masters == [None, "local[3]", "inherit"]
+
+
 def test_end_to_end_run_resume_and_compare(spark, sf_tiny, tmp_path, capsys):
     out = str(tmp_path / "out")
     n = run_cli(["-o", out, "-e", "-c", "-q", "-t", "4", sf_tiny])

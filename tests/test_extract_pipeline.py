@@ -269,3 +269,64 @@ def test_forget_zip_finders_leaves_zip_importable(tmp_path, monkeypatch):
     finally:
         sys.modules.pop("zipmod_first", None)
         sys.modules.pop("zipmod_second", None)
+
+
+def _txt(text, offset):
+    return {"kind": "text", "text": text, "media_ref": None, "offset": offset}
+
+
+def _line(ref, offset):
+    return {"kind": "line_image", "text": "", "media_ref": ref, "offset": offset}
+
+
+def _obj(ref, text):
+    from handprint_spark.kernels import codec
+
+    return {"media_ref": ref, "content": codec.encode_media(text)}
+
+
+def _ocr(ref, text, offset):
+    return {"kind": "ocr", "text": text, "media_ref": ref, "offset": offset}
+
+
+# Null layouts that used to raise TypeError in a task (failing the
+# whole batch). The rule: null offsets sort last (stably), null span
+# elements are dropped, null media objects are ignored.
+NULL_LAYOUTS = {
+    "null_offset": (
+        [_line("m0", None), _txt("b", 2), _txt("c", None), _txt("a", 1)],
+        [_obj("m0", "zero")],
+        [_txt("a", 1), _txt("b", 2), _ocr("m0", "zero", None), _txt("c", None)],
+        (1, 0),
+    ),
+    "null_span": (
+        [_txt("a", 0), None, _line("m0", 1), None],
+        [_obj("m0", "zero")],
+        [_txt("a", 0), _ocr("m0", "zero", 1)],
+        (1, 0),
+    ),
+    "null_media_object": (
+        [_line("m0", 0), _line("m1", 1)],
+        [None, _obj("m1", "one"), None],
+        [{"kind": "error", "text": "missing media: m0", "media_ref": "m0", "offset": 0},
+         _ocr("m1", "one", 1)],
+        (2, 1),
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", sorted(NULL_LAYOUTS))
+def test_null_layouts_are_values_not_failures(spark, layout):
+    """extract_one and extract_documents agree on the null rule, and
+    neither raises."""
+    from handprint_spark.corpus import MEDIA_TYPE, SPAN_TYPE
+    from pyspark.sql import types as T
+
+    spans, media, exp_spans, (n_media, n_errors) = NULL_LAYOUTS[layout]
+    assert extract_one("d", spans, media) == ("d", exp_spans, n_media, n_errors)
+    schema = T.StructType([T.StructField("doc_id", T.StringType()),
+                           T.StructField("spans", SPAN_TYPE),
+                           T.StructField("media", MEDIA_TYPE)])
+    (row,) = extract_documents(spark.createDataFrame([("d", spans, media)], schema)).collect()
+    assert [s.asDict() for s in row.spans] == exp_spans
+    assert (row.n_media, row.n_errors) == (n_media, n_errors)

@@ -244,8 +244,8 @@ def test_skew_chunks_spread_over_partitions(spark):
     assert len(at) == 1
     # the heavy branch prints last and top-down: its Python stage sits
     # above the Exchange, and nothing below it crosses into Python
-    assert any("MapInPandas" in line for line in lines[at[0] - 2:at[0]])
-    assert not any("MapInPandas" in line for line in lines[at[0]:])
+    assert any("MapInArrow" in line for line in lines[at[0] - 2:at[0]])
+    assert not any("MapInArrow" in line for line in lines[at[0]:])
 
 
 def test_minhash_sigs_single_exchange(spark, sf_small):

@@ -1,6 +1,7 @@
 """Checkpoint/lineage resume protocol (SURVEY §2.1 S8 / §2.3 J3):
 kill-and-restart must converge to the same table a single run makes."""
 
+import re
 import shutil
 import tempfile
 
@@ -171,3 +172,55 @@ def test_curation_run_is_resumable(spark, sf_tiny, tmp_path):
     assert m2["kept"] == 0
     got2 = [r.doc_id for r in table_sink.load(spark, keep_dir).collect()]
     assert sorted(got2) == sorted(full)
+
+
+def test_run_batch_is_one_spark_job(spark, sf_tiny, tmp_path):
+    """Into a fresh path sink one run_batch launches exactly one Spark
+    job of one stage (extraction and results write), so its Python
+    tasks run in that one stage; the lineage row is a driver-side file
+    commit that reads back with LINEAGE_SCHEMA."""
+    from pyspark.sql.types import StructType
+
+    from handprint_spark.sources.checkpoints import LINEAGE_SCHEMA
+
+    inp, results_dir, lineage_dir = (str(tmp_path / d) for d in ("in", "results", "lineage"))
+    _spans(spark, sf_tiny).limit(40).write.parquet(inp)
+    spans = spark.read.parquet(inp)
+    sc = spark.sparkContext
+    sc.setJobGroup("hp-one-batch", "one run_batch")
+    try:
+        m = run_batch(spark, spans, results_dir, lineage_dir, batch_id=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup("hp-one-batch"))
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+
+    lineage = spark.read.parquet(lineage_dir)
+    assert lineage.schema == StructType.fromDDL(LINEAGE_SCHEMA)
+    (row,) = lineage.collect()
+    assert (row.batch_id, row.n_docs, row.n_media, row.n_errors) == (
+        3, 40, m["media"], m["errors"])
+    visible = [p.name for p in (tmp_path / "lineage").iterdir()
+               if not p.name.startswith((".", "_"))]
+    assert len(visible) == 1 and re.fullmatch(r"part-[0-9a-f-]{36}\.parquet", visible[0])
+
+
+def test_load_of_missing_sink_reads_nothing(spark, tmp_path, monkeypatch):
+    """A missing path, a directory holding only a crashed write's
+    ``_temporary``, and a missing table all load as None without
+    spark.read being called."""
+    from pyspark.sql import SparkSession
+
+    from handprint_spark.sources import table_sink
+
+    (tmp_path / "crashed" / "_temporary").mkdir(parents=True)
+
+    def no_read(self):
+        raise AssertionError("spark.read called for a missing sink")
+
+    monkeypatch.setattr(SparkSession, "read", property(no_read))
+    assert table_sink.load(spark, str(tmp_path / "missing")) is None
+    assert table_sink.load(spark, str(tmp_path / "crashed")) is None
+    assert table_sink.load(spark, "hp_missing_table") is None
