@@ -18,7 +18,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship extraction pipeline on /root/testdata/sf0.001.
 
     documents parquet → deterministic interleaved-span derivation
-    (corpus.spanify) → narrow mapInPandas extraction (normalize chain +
+    (corpus.spanify) → narrow mapInArrow extraction (normalize chain +
     deterministic HTR decode per media span) → exploded span rows
     (doc_id, kind, text, media_ref, offset, n_media, n_errors).
     """
@@ -64,152 +64,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     from handprint_spark.streaming import queries as streaming_queries
 
-    # REGISTRATION ORDER IS THE VERIFICATION WINDOW: the driver's
-    # CORRECTNESS run caps at 50 entries in dict insertion order, so
-    # each round rotates the set needing fresh driver rows to the
-    # front (documented in COVERAGE.md §verification-rotation).
-    #
-    # Round 5 window (exactly 50), in priority order:
-    # (a) the 15 entries that have never had a driver row (13
-    #     oracle-backed sweep-verified in r04 + the 2 rows-only
-    #     comparison queries, whose golden-string pytest coverage the
-    #     judge asked to keep documented);
-    # (b) the 11 queries NEW this round (embedding-LSH second banding
-    #     + stats, BPE train/encode/normalize/approx-quantiles,
-    #     BPE-accounted shard pack, k-means + trained IVF/PQ +
-    #     recall);
-    # (c) the 9 queries whose function bodies (or a shared core they
-    #     call: embedding_neardup, duplicate_clusters' persist
-    #     protocol, minhash_band_posting validation, canonical_url's
-    #     third strip pass, shard_pack factor, 3-method recall)
-    #     changed this round;
-    # (d) 15 slots of the OLDEST green rows rotated back in (the r02
-    #     cohort x1/x4/x5, mm_media_features, ta_token_count/lang_id/
-    #     fingerprint, plus r03 rows dd_exact/dd_simhash/
-    #     dd_ngram_jaccard/dd_contamination/dd_lsh_stats/
-    #     sim_lsh_buckets and two relational representatives).
-    # Everything below the boundary is byte-unchanged since its last
-    # green driver row and re-verified by the full check_oracles sweep
-    # this round.
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    # (a) never driver-verified
-    for k in ("cur_train_split", "cur_temperature_mix", "cur_split_oov", "cur_contam_purge"):
-        out[k] = curation.QUERIES[k]
-    for k in ("dd_paragraph_dedup", "dd_fuzzy_contamination", "dd_minhash_est"):
-        out[k] = dedup.QUERIES[k]
-    out["ev_funnel"] = relational.QUERIES["ev_funnel"]
-    out["hx_anchor_text"] = html_extract.QUERIES["hx_anchor_text"]
-    out["hx_tables"] = html_extract.QUERIES["hx_tables"]
-    out["mm_caption_align"] = multimodal.QUERIES["mm_caption_align"]
-    out["ta_bigram_logprob"] = text_analysis.QUERIES["ta_bigram_logprob"]
-    out["ta_source_kl"] = text_analysis.QUERIES["ta_source_kl"]
-    # cmp_lines yields its slot to the NEW oracle-backed
-    # ta_bpe_fertility (below) — the r04 precedent: a rows-only driver
-    # row carries the least evidence (no SQL oracle), its byte-exact
-    # reference golden-string pytest coverage is unchanged, and its
-    # clean-slice shape stays oracle-checked via cmp_lines_clean.
-    # cmp_tsv stays as the rows-only family's driver representative.
-    out["cmp_tsv"] = compare.QUERIES["cmp_tsv"]
-    # (b) new this round — including the TEN Structured Streaming
-    # drain queries (streaming/queries.py): each runs the streaming
-    # form of a stage under Trigger.AvailableNow against the BATCH
-    # oracle, so their driver rows are machine-checked stream/batch
-    # parity certificates — including the stateful watermark shape
-    # (st_event_counts: the append-mode eviction rule is the oracle)
-    # and the trained-classifier gate (st_clf_gate, which took the
-    # dd_embedding_neardup slot — rationale at the (c) group below).
-    # The first nine took nine (d) backfill slots (dd_exact/dd_simhash/
-    # dd_ngram_jaccard/dd_contamination/dd_lsh_stats/sim_lsh_buckets/
-    # ta_fingerprint/ta_lang_id/ta_token_count: r02-r03 green,
-    # byte-unchanged, sweep-verified this round).
-    out.update(streaming_queries.QUERIES)
-    for k in ("dd_emb_neardup_wide", "dd_emb_lsh_stats"):
-        out[k] = dedup.QUERIES[k]
-    for k in (
-        "ta_bpe_train",
-        "ta_bpe_encode",
-        "ta_normalize",
-        "ta_len_quantiles_approx",
-        # posting-list form of the Gopher dup-ngram rule, added in the
-        # round-5 continuation — never driver-verified, so it takes the
-        # mm_media_features backfill slot (r02 green, byte-unchanged,
-        # sweep-verified).
-        "ta_gopher_dup_posting",
-    ):
-        out[k] = text_analysis.QUERIES[k]
-    out["cur_shard_pack_bpe"] = curation.QUERIES["cur_shard_pack_bpe"]
-    for k in ("sim_kmeans", "sim_ivf_trained", "sim_pq_trained_topk", "sim_pq_recall"):
-        out[k] = similarity.QUERIES[k]
-    # (c) bodies (or shared cores) changed this round.
-    # dd_semantic_clusters yields its slot to the NEW dd_semdedup
-    # (below): both of its cores keep in-window exercisers
-    # (embedding_neardup via dd_embedding_neardup at the same banding;
-    # the CC machinery via dd_dup_clusters), and it stays covered by
-    # the in-session full check_oracles sweep.
-    # dd_neardup_keep likewise yields to the NEW cur_dsir_select
-    # (below): its cores stay exercised in-window by dd_dup_clusters
-    # (same CC over the same pairs) and dd_minhash_lsh_pairs (the
-    # pairs themselves); its unique anti-join tail is sweep-covered.
-    # dd_embedding_neardup yields to the NEW tenth streaming drain
-    # (st_clf_gate, registered with the streaming family above): the
-    # parameterized embedding_neardup core keeps TWO in-window
-    # exercisers (dd_emb_neardup_wide at a second banding and
-    # dd_emb_lsh_stats), and the default banding stays sweep-covered.
-    for k in (
-        "dd_dup_clusters",
-        "dd_incremental",
-        "dd_minhash_lsh_pairs",
-    ):
-        out[k] = dedup.QUERIES[k]
-    out["hx_url_canonicalize"] = html_extract.QUERIES["hx_url_canonicalize"]
-    out["sim_ann_recall"] = similarity.QUERIES["sim_ann_recall"]
-    out["cur_shard_pack"] = curation.QUERIES["cur_shard_pack"]
-    # Round-5 continuation additions — never driver-verified, so they
-    # rank above oldest-green backfill and take the three remaining
-    # (d) slots (x1_amazon_parse / x4_google_parse /
-    # x5_microsoft_parse: r02 green, byte-unchanged, sweep-verified
-    # this round): the latest-fetch-wins URL revisit dedup and the
-    # distributed classifier train + trained-inference pair.
-    out["hx_url_revisit"] = html_extract.QUERIES["hx_url_revisit"]
-    out["ta_train_linear_clf"] = text_analysis.QUERIES["ta_train_linear_clf"]
-    out["ta_hash_score_trained"] = text_analysis.QUERIES["ta_hash_score_trained"]
-    # dd_semdedup (SemDeDup: within-trained-kmeans-cluster exact
-    # integer epsilon-ball pruning) is NEW — it takes the
-    # dd_semantic_clusters slot (rationale at the (c) group above).
-    out["dd_semdedup"] = dedup.QUERIES["dd_semdedup"]
-    # cur_dsir_select (DSIR importance selection: smoothed unigram
-    # log-likelihood-ratio scoring + exact top-K) is NEW — it takes
-    # the dd_neardup_keep slot (rationale at the (c) group above).
-    out["cur_dsir_select"] = curation.QUERIES["cur_dsir_select"]
-    # ta_bpe_fertility (per-lang trained-BPE fertility — the
-    # tokenizer-bias dashboard) is NEW — it takes the cmp_lines slot
-    # (rationale at the (a) group above).
-    out["ta_bpe_fertility"] = text_analysis.QUERIES["ta_bpe_fertility"]
-    # ct_chunk_tokens' body changed late in round 5 (windowing core
-    # factored into chunk_array) and ct_chunk_bpe is NEW — both rank
-    # above oldest-green backfill, taking the two relational slots
-    # (j3_anti_join / ev_asof_join: r03 green, byte-unchanged,
-    # sweep-verified this round).
-    out["ct_chunk_tokens"] = html_extract.QUERIES["ct_chunk_tokens"]
-    out["ct_chunk_bpe"] = html_extract.QUERIES["ct_chunk_bpe"]
-    # --- driver window boundary (50 entries above) ---
-    # Fifth-continuation-session additions (ta_c4_rules,
-    # ta_ppl_buckets, ta_zipf_fit, ev_retention, st_pii_redact, ...)
-    # register below the boundary — the window's 50 slots all hold
-    # higher-priority never-driver-verified entries frozen earlier in
-    # the round — and carry in-session check_oracles PASS rows
-    # (the ta_clf_eval precedent).
-    out.update(streaming_queries.EXTRA_QUERIES)
-    out.update(similarity.QUERIES)
-    out.update(dedup.QUERIES)
-    out.update(text_analysis.QUERIES)
-    out.update(html_extract.QUERIES)
     out.update(compare.QUERIES)
-    out.update(multimodal.QUERIES)
-    out.update(service_queries.QUERIES)
-    out.update(service_fanout.QUERIES)
     out.update(curation.QUERIES)
+    out.update(dedup.QUERIES)
+    out.update(html_extract.QUERIES)
+    out.update(multimodal.QUERIES)
     out.update(relational.QUERIES)
+    out.update(service_fanout.QUERIES)
+    out.update(service_queries.QUERIES)
+    out.update(similarity.QUERIES)
+    out.update(text_analysis.QUERIES)
+    out.update(streaming_queries.QUERIES)
     return out
 
 

@@ -453,10 +453,6 @@ def _oracles() -> dict:
     }
 
 
-# The ten drains the r05 driver window holds. st_pii_redact (added in
-# the fifth continuation session, after the window was frozen at 50)
-# lives in EXTRA_QUERIES so __spark_entry__ can register it BELOW the
-# window boundary without perturbing window membership.
 QUERIES = {
     "st_clf_gate": q_st_clf_gate,
     "st_quality_gate": q_st_quality_gate,
@@ -468,9 +464,6 @@ QUERIES = {
     "st_sessionize": q_st_sessionize,
     "st_first_seen": q_st_first_seen,
     "st_decontaminate": q_st_decontaminate,
-}
-
-EXTRA_QUERIES = {
     "st_pii_redact": q_st_pii_redact,
     "st_c4_rules": q_st_c4_rules,
     "st_gopher_rules": q_st_gopher_rules,

@@ -3,12 +3,13 @@ sf0.001 (fast). The driver runs the same comparison at sf0.01; this
 test catches engine-divergence regressions (float policy, rounding,
 column naming) inside `python -m pytest` itself."""
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from tools.check_oracles import TABLES, compare  # noqa: E402

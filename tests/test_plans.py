@@ -325,47 +325,6 @@ def test_ann_index_probe_partition_prunes(spark, sf_small, tmp_path):
     }
 
 
-def test_bucketed_join_is_shuffle_free(spark, sf_tiny):
-    """Two tables bucketed+sorted on doc_id with the same bucket count
-    must sort-merge-join with ZERO Exchange (and zero extra Sort) in
-    the plan — the co-located layout a 10^12-row deployment uses for
-    every doc_id-keyed join."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from handprint_spark.corpus import load_documents_spans
-    from handprint_spark.operators.compare import ground_truth
-    from handprint_spark.operators.extract import extract_documents
-    from handprint_spark.plans.bucketing import colocated_join, write_bucketed
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("hp_bk_results", "hp_bk_gt"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-    try:
-        results = extract_documents(load_documents_spans(spark, sf_tiny).limit(80)).select(
-            "doc_id", "n_media", "n_errors"
-        )
-        gt = ground_truth(spark, sf_tiny)
-        write_bucketed(results, "hp_bk_results", buckets=4)
-        write_bucketed(gt, "hp_bk_gt", buckets=4)
-
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = colocated_join(spark, "hp_bk_results", "hp_bk_gt")
-            plan = plan_str(joined, "simple")
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # both sides pre-bucketed
-            assert joined.count() == 80
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        for t in ("hp_bk_results", "hp_bk_gt"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_ann_index_cache_key_tracks_content_and_path(tmp_path):
     """The default index dir must change when the corpus content
     changes (no stale-index serves after an in-place rewrite) and must
