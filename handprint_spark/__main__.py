@@ -225,7 +225,8 @@ def run_cli(argv: list[str] | None = None) -> int:
 
     from .sources import table_sink
 
-    if not args.reuse_results and table_sink.load(spark, results_dir) is not None:
+    prior_results = table_sink.load(spark, results_dir)
+    if not args.reuse_results and prior_results is not None:
         raise CannotProceed(
             ExitCode.file_error,
             f"{results_dir} already holds results; pass -j to resume "
@@ -274,14 +275,9 @@ def run_cli(argv: list[str] | None = None) -> int:
     # resume, and the per-batch sinks (filter batch_id == N) would
     # attribute the crashed corpus's rows to it (wrong grid rows,
     # wrong ground-truth comparison). The parquet max() is a
-    # footer-stats scan, not a data read.
-    prior_results = table_sink.load(spark, results_dir)
-    high = [
-        int(t.agg(F.max("batch_id")).first()[0])
-        for t in (lineage, prior_results)
-        if t is not None and not t.isEmpty()
-    ]
-    first_batch = max(high) + 1 if high else 0
+    # footer-stats scan, not a data read; it is None on an empty sink.
+    high = [t.agg(F.max("batch_id")).first()[0] for t in (lineage, prior_results) if t is not None]
+    first_batch = max((h for h in high if h is not None), default=-1) + 1
 
     total_docs = 0
     for offset, corpus in enumerate(args.corpora):

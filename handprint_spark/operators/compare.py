@@ -33,7 +33,6 @@ from pyspark.sql import types as T
 
 from ..corpus import split_lines
 from ..kernels.textcmp import align_lines, text_comparison
-from .extract import forget_zip_finders
 
 LINE_STRUCT = T.StructType(
     [
@@ -53,7 +52,6 @@ def ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf(T.StringType())
     def gt_text(texts: pd.Series) -> pd.Series:
-        forget_zip_finders()
         return texts.map(lambda t: "\n".join(split_lines(t)))
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -65,7 +63,6 @@ def ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _align_udf(relaxed: bool):
     @F.pandas_udf(T.ArrayType(LINE_STRUCT))
     def align(htr: pd.Series, gt: pd.Series) -> pd.Series:
-        forget_zip_finders()
         out = []
         for h, g in zip(htr, gt):
             rows = align_lines(h or "", g or "", relaxed)
@@ -81,14 +78,18 @@ def _align_udf(relaxed: bool):
     return align
 
 
+def _with_gt(htr_df: DataFrame, gt_df: DataFrame) -> DataFrame:
+    """J1: every HTR row with its ground truth, "" where there is none."""
+    return htr_df.join(gt_df, "doc_id", "left").fillna({"gt_text": ""})
+
+
 def compare_to_ground_truth(
     htr_df: DataFrame, gt_df: DataFrame, relaxed: bool = False
 ) -> DataFrame:
     """(doc_id, text) ⋈ (doc_id, gt_text) -> aligned lines table:
     comparisons(doc_id, line_no, distance, cer, gt_line, htr_line)."""
     align = _align_udf(relaxed)
-    joined = htr_df.join(gt_df, "doc_id", "left").fillna({"gt_text": ""})
-    aligned = joined.select("doc_id", align("text", "gt_text").alias("lines"))
+    aligned = _with_gt(htr_df, gt_df).select("doc_id", align("text", "gt_text").alias("lines"))
     return aligned.select("doc_id", F.explode("lines").alias("ln")).select(
         "doc_id",
         F.col("ln.line_no").alias("line_no"),
@@ -101,10 +102,8 @@ def compare_to_ground_truth(
 
 def comparison_totals(htr_df: DataFrame, gt_df: DataFrame, relaxed: bool = False) -> DataFrame:
     """A2 per-doc total errors — aggregated inside the row (no shuffle)."""
-    align = _align_udf(relaxed)
-    joined = htr_df.join(gt_df, "doc_id", "left").fillna({"gt_text": ""})
-    lines = align("text", "gt_text")
-    return joined.select(
+    lines = _align_udf(relaxed)("text", "gt_text")
+    return _with_gt(htr_df, gt_df).select(
         "doc_id",
         F.aggregate(
             lines, F.lit(0), lambda acc, ln: acc + ln["distance"]
@@ -118,13 +117,11 @@ def comparison_tsv(htr_df: DataFrame, gt_df: DataFrame, relaxed: bool = False) -
 
     @F.pandas_udf(T.StringType())
     def tsv(htr: pd.Series, gt: pd.Series) -> pd.Series:
-        forget_zip_finders()
         return pd.Series(
             [text_comparison(h or "", g or "", relaxed) for h, g in zip(htr, gt)]
         )
 
-    joined = htr_df.join(gt_df, "doc_id", "left").fillna({"gt_text": ""})
-    return joined.select("doc_id", tsv("text", "gt_text").alias("report"))
+    return _with_gt(htr_df, gt_df).select("doc_id", tsv("text", "gt_text").alias("report"))
 
 
 # --- registered queries ----------------------------------------------------

@@ -30,13 +30,6 @@ Design notes for 100 TB (SURVEY.md §4):
   * Determinism: every stage is a pure function of the input row, so
     output is identical at any parallelism — the property the
     span-sequence-equality gate and checkpoint resume rely on.
-  * Per-task cost: PySpark's worker calls importlib.invalidate_caches()
-    before every task, and on Python 3.11 each zipimporter in
-    sys.path_importer_cache then re-reads its whole archive directory
-    (pyspark.zip: 16 finders x 1,328 entries; 0.2-0.27 s of worker CPU
-    per task on a 4-vCPU host, for any UDF, even with zero rows).
-    Every Python stage body calls ``forget_zip_finders`` first, so a
-    reused worker pays that once, not on every task.
 
 Output contract (north_rule span-sequence equality):
     results(doc_id: string,
@@ -75,20 +68,6 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("n_errors", T.IntegerType()),
     ]
 )
-
-
-def forget_zip_finders() -> None:
-    """Drop the zipimporter entries from ``sys.path_importer_cache``,
-    so the next task's ``importlib.invalidate_caches()`` has no zip
-    directory to re-read. Safe: a later import from the zip re-creates
-    its finder from zipimport's directory cache."""
-    import sys
-    import zipimport
-
-    cache = sys.path_importer_cache
-    for path, finder in list(cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            cache.pop(path, None)
 
 
 def _media_span(ref, content) -> tuple[str, str]:
@@ -191,7 +170,6 @@ def extract_documents(df: DataFrame) -> DataFrame:
     three columns cross into Python, as Arrow batches."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        forget_zip_finders()
         for batch in batches:
             yield extract_batch(batch)
 

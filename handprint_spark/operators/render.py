@@ -24,7 +24,6 @@ from pyspark.sql import types as T
 from ..kernels import codec
 from ..kernels.decoder import decode_media_bytes
 from ..kernels.render import annotate, make_grid
-from .extract import forget_zip_finders
 
 ANNOTATED_SCHEMA = T.StructType(
     [
@@ -60,7 +59,6 @@ def annotated_media(
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        forget_zip_finders()
         for pdf in batches:
             rows = []
             for doc_id, ref, content in zip(pdf["doc_id"], pdf["media_ref"], pdf["content"]):
@@ -109,7 +107,6 @@ def doc_grids(annotated: DataFrame, max_horizontal: int = 4) -> DataFrame:
     def build(key, pdf):
         import pandas as pd
 
-        forget_zip_finders()
         order = sorted(range(len(pdf)), key=lambda i: _natural(pdf["media_ref"].iat[i]))
         pdf = pdf.iloc[order]
         images = [bytes(b) for b in pdf["annotated"] if b is not None]

@@ -7,8 +7,9 @@ multi-executor cluster reading ~100 TB and only *tested* on local[N]:
   * Arrow on for every pandas UDF boundary, with a bounded
     ``maxRecordsPerBatch`` so batches of media BLOBs can't blow
     executor memory (media rows are KB-to-MB sized);
-  * shuffle partitions sized by caller (tests use 8-32; a real
-    cluster would use 2-3x total cores);
+  * shuffle partitions sized by caller, else one per core in the CPU
+    affinity mask (tests use 4; a real cluster would use 2-3x total
+    cores);
   * 128 MiB scan splits — the parquet/Iceberg sweet spot.
 """
 

@@ -171,3 +171,23 @@ def test_resume_skips_orphaned_results_batch_id(spark, sf_tiny, tmp_path):
     assert run_cli(["-j", "-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 1
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
     assert lineage.agg(F.max("batch_id")).first()[0] == 8  # past the orphan
+
+
+def test_resume_after_a_first_run_that_kept_no_document(spark, sf_tiny, tmp_path):
+    """A first run whose -f keep-list matches no document commits a
+    results sink with zero rows and no lineage row; its high-water
+    mark is no batch at all, so a -j resume starts at batch 0."""
+    keep = tmp_path / "keep.txt"
+    keep.write_text("no-such-doc\n")
+    out = str(tmp_path / "out")
+    assert run_cli(["-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 0
+    results_dir = os.path.join(out, "results")
+    assert spark.read.parquet(results_dir).count() == 0
+    assert not os.path.isdir(os.path.join(out, "lineage"))
+
+    doc_id = spark.read.parquet(f"{sf_tiny}/documents.parquet").first().doc_id
+    keep.write_text(str(doc_id))
+    assert run_cli(["-j", "-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 1
+    lineage = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    assert [(r.batch_id, r.n_docs) for r in lineage] == [(0, 1)]
+    assert [r.batch_id for r in spark.read.parquet(results_dir).collect()] == [0]

@@ -16,7 +16,6 @@ from handprint_spark.operators.extract import (
     extract_documents,
     extract_one,
     extracted_text,
-    forget_zip_finders,
 )
 
 
@@ -242,13 +241,16 @@ def test_spanify_empty_text_matches_python_twin(spark):
     assert got["101"] == (0, 0) and got["104"] == (2, 1)
 
 
-def test_forget_zip_finders_leaves_zip_importable(tmp_path, monkeypatch):
-    """The per-task helper drops every zipimporter from
-    sys.path_importer_cache, and a module not yet imported from the
-    same zip still imports afterwards."""
+def test_invalidate_caches_drops_zip_finders_and_leaves_zip_importable(tmp_path, monkeypatch):
+    """Once the package is imported, importlib.invalidate_caches()
+    drops every zipimporter from sys.path_importer_cache, and a module
+    not yet imported from the same zip still imports afterwards."""
+    import importlib
     import sys
     import zipfile
     import zipimport
+
+    import handprint_spark  # noqa: F401  (installs the wrapper)
 
     archive = tmp_path / "mods.zip"
     with zipfile.ZipFile(archive, "w") as zf:
@@ -260,7 +262,7 @@ def test_forget_zip_finders_leaves_zip_importable(tmp_path, monkeypatch):
 
         assert zipmod_first.VALUE == 1
         assert isinstance(sys.path_importer_cache[str(archive)], zipimport.zipimporter)
-        forget_zip_finders()
+        importlib.invalidate_caches()
         assert not any(isinstance(f, zipimport.zipimporter)
                        for f in sys.path_importer_cache.values())
         import zipmod_second
@@ -269,6 +271,38 @@ def test_forget_zip_finders_leaves_zip_importable(tmp_path, monkeypatch):
     finally:
         sys.modules.pop("zipmod_first", None)
         sys.modules.pop("zipmod_second", None)
+
+
+def test_reused_workers_start_tasks_with_no_zip_finders(spark):
+    """spanify's encode UDF has no import-cache code of its own, yet
+    every later task on a worker that ran it starts under the
+    package's wrapped importlib.invalidate_caches, with no zipimporter
+    left in sys.path_importer_cache for the next task to re-read."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from handprint_spark.corpus import spanify
+
+    # 32 tasks on local[4]: each Python worker runs several of them
+    docs = spark.range(64, numPartitions=32).select(
+        F.col("id").alias("doc_id"), F.lit("one two three four").alias("text"))
+    spanify(docs).write.format("noop").mode("overwrite").save()
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        zips = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"invalidate": [importlib.invalidate_caches.__module__], "zips": [zips]})
+
+    seen = spark.range(8, numPartitions=8).mapInArrow(
+        probe, "invalidate string, zips long").collect()
+    assert len(seen) == 8
+    assert {(r.invalidate, r.zips) for r in seen} == {("handprint_spark", 0)}
 
 
 def _txt(text, offset):
