@@ -10,11 +10,15 @@ BASELINE.json's ``input_hint`` fixes the engine's input shape:
 The sandbox testdata ships a flat ``documents(doc_id, text, ...)``
 table instead, so this module *derives* the span table from it with a
 pure, seedless, content-addressed rule — identical on the driver (the
-sequential reference path used for span-sequence-equality tests) and
-in Spark (JVM expressions + one Arrow-batched encode UDF). No external
-data; same input → same table at any parallelism.
+sequential reference path used for span-sequence-equality tests), in
+Spark (JVM expressions + one Arrow-batched encode UDF), and in the
+DuckDB oracles (the ``CORPUS_*_SQL`` relations). No external data;
+same input → same table at any parallelism.
 
-Span-ification rule (fixed; both implementations must agree):
+Span-ification rule (fixed; all three implementations — ``build_doc``,
+``spanify`` and the SQL mirror — must agree; the tests
+``test_span_equality_non_numeric_doc_ids`` and
+``test_corpus_sql_mirror_matches_build_doc`` pin them to each other):
   * sanitize: form feeds stripped from text (HPM1 uses \\f as its page
     separator — see .claude/skills/verify gotcha);
   * the document text splits into lines of WORDS_PER_LINE words;
@@ -184,8 +188,8 @@ def spanify(documents: DataFrame) -> DataFrame:
     # Filter empty strings like the Python twin (split_lines's `if w`):
     # Spark's split("", " +") yields [""], which un-filtered produced
     # ONE empty line — a whole span + media object — for an
-    # empty/whitespace-only document, where split_lines and every
-    # oracle CTE produce zero.
+    # empty/whitespace-only document, where split_lines and
+    # CORPUS_LINES_SQL produce zero.
     words = F.filter(
         F.split(F.trim(F.translate(F.col("text"), "\f", " ")), " +"),
         lambda w: w != "",
@@ -273,3 +277,55 @@ def materialize_spans(
         "n_media"
     ).write.mode("overwrite").parquet(out_dir)
     return out_dir
+
+
+# --- DuckDB mirror (the oracles' statement of the rule) -------------------
+#
+# Relations over a ``documents`` table; an oracle embeds them as
+# subqueries, ``FROM ({CORPUS_SPANS_SQL})``. ``h`` is doc_slice_hash;
+# ``base_lines`` is the line split before the skew step, ``lines``
+# after it; ``idx`` / ``off`` are 0-based like the Python reference.
+
+CORPUS_LINES_SQL = f"""
+SELECT doc_id, h, base_lines,
+       CASE WHEN h % {SKEW_MOD} = 0 AND len(base_lines) > 0
+            THEN flatten(list_transform(range({SKEW_FACTOR}), r -> base_lines))
+            ELSE base_lines END AS lines
+FROM (
+  SELECT doc_id, h,
+         list_transform(range(0, CAST(ceil(len(words) / {WORDS_PER_LINE}.0) AS INT)),
+                        i -> array_to_string(words[i*{WORDS_PER_LINE}+1 :
+                                                   i*{WORDS_PER_LINE}+{WORDS_PER_LINE}],
+                                             ' ')) AS base_lines
+  FROM (
+    SELECT doc_id::VARCHAR AS doc_id,
+           ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
+           CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
+                ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
+                                                 ' +', ' ', 'g'), ' ')
+           END AS words
+    FROM documents))
+"""
+
+CORPUS_MEDIA_SQL = f"""
+SELECT doc_id, h, m.idx AS idx, m.media_ref AS media_ref, m.line AS line,
+       (h % {CORRUPT_MOD} = 0 AND m.idx = 0) AS is_error
+FROM (SELECT doc_id, h,
+             unnest(list_transform(lines, (line, i) -> struct_pack(
+                 idx := i - 1,
+                 media_ref := doc_id || '/line-' || (i - 1)::VARCHAR,
+                 line := line))) AS m
+      FROM ({CORPUS_LINES_SQL}))
+"""
+
+CORPUS_SPANS_SQL = f"""
+SELECT doc_id, s.kind AS kind, s.text AS text, s.media_ref AS media_ref, s.off AS off
+FROM (SELECT doc_id,
+             unnest(flatten(list_transform(lines, (line, i) -> [
+               struct_pack(kind := 'text', text := line, media_ref := '',
+                           off := 2 * (i - 1)),
+               struct_pack(kind := 'line_image', text := '',
+                           media_ref := doc_id || '/line-' || (i - 1)::VARCHAR,
+                           off := 2 * (i - 1) + 1)]))) AS s
+      FROM ({CORPUS_LINES_SQL}))
+"""

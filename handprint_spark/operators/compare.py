@@ -182,73 +182,40 @@ def q_cmp_tsv(spark, sf_dir):
 
 
 # DuckDB re-derivation of the comparison totals from the corpus rule
-# (same line-split / skew constants as corpus.py — single source of
-# truth asserted by tests/test_oracles.py).
+# (corpus.CORPUS_LINES_SQL — the same line split / skew constants as
+# corpus.spanify).
 def _sql_cmp_totals() -> str:
-    from ..corpus import CORRUPT_MOD, SKEW_FACTOR, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_LINES_SQL, CORRUPT_MOD, SKEW_FACTOR, SKEW_MOD
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines
-  FROM base
-)
 SELECT doc_id,
-       CAST(CASE WHEN h % {SKEW_MOD} = 0 AND len(lines) > 0
-                 THEN {2 * (SKEW_FACTOR - 1)} * list_sum(list_transform(lines, x -> len(x)))
-                      - len(lines[1]) - len(lines[len(lines)])
+       CAST(CASE WHEN h % {SKEW_MOD} = 0 AND len(base_lines) > 0
+                 THEN {2 * (SKEW_FACTOR - 1)}
+                      * list_sum(list_transform(base_lines, x -> len(x)))
+                      - len(base_lines[1]) - len(base_lines[len(base_lines)])
                  ELSE 0 END AS INT) AS total_errors,
-       CAST(CASE WHEN h % {SKEW_MOD} = 0 AND len(lines) > 0
-                 THEN {2 * SKEW_FACTOR - 1} * len(lines) - 2
-                 ELSE len(lines) END AS INT) AS n_lines
-FROM lined
+       CAST(CASE WHEN h % {SKEW_MOD} = 0 AND len(base_lines) > 0
+                 THEN {2 * SKEW_FACTOR - 1} * len(base_lines) - 2
+                 ELSE len(base_lines) END AS INT) AS n_lines
+FROM ({CORPUS_LINES_SQL})
 WHERE h % {CORRUPT_MOD} <> 0
 """
 
 
-# Clean-slice per-line oracle: identity alignment, derived from the
-# same corpus line rule as _sql_cmp_totals (single source of truth).
+# Clean-slice per-line oracle: identity alignment over the corpus
+# media rows (one per line) of docs outside the skew/corrupt slices.
 def _sql_cmp_lines_clean() -> str:
-    from ..corpus import CORRUPT_MOD, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_MEDIA_SQL, CORRUPT_MOD, SKEW_MOD
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines
-  FROM base
-  WHERE h % {SKEW_MOD} <> 0 AND h % {CORRUPT_MOD} <> 0
-), rows_ AS (
-  SELECT doc_id,
-         unnest(list_transform(lines, (x, i) -> {{'line': x, 'i': i}})) AS u
-  FROM lined
-)
 SELECT doc_id,
-       CAST(u.i - 1 AS INT) AS line_no,
+       CAST(idx AS INT) AS line_no,
        CAST(0 AS INT) AS distance,
        '0.00' AS cer,
-       u.line AS gt_line,
-       u.line AS htr_line
-FROM rows_
+       line AS gt_line,
+       line AS htr_line
+FROM ({CORPUS_MEDIA_SQL})
+WHERE h % {SKEW_MOD} <> 0 AND h % {CORRUPT_MOD} <> 0
 """
 
 

@@ -176,17 +176,16 @@ def extract_documents(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "spans", "media").mapInArrow(run, RESULT_SCHEMA)
 
 
-def observed(results: DataFrame, observation=None) -> DataFrame:
+def observed(results: DataFrame, observation) -> DataFrame:
     """A5: job-level counters via ``df.observe`` — the Spark-native
     form of the reference's count/pluralize reporting
     (main_body.py:115-125). The metrics ride the action that consumes
-    ``results`` (no extra pass/shuffle). Pass a ``pyspark.sql.
-    Observation`` to read them on the driver after the action; with no
-    argument a named observation is attached for QueryExecutionListener
-    consumers. ``checkpoints.run_batch`` builds each batch's lineage row
-    from these metrics, doc range (``min_doc``/``max_doc``) included."""
+    ``results`` (no extra pass/shuffle); read them from the
+    ``pyspark.sql.Observation`` on the driver after the action.
+    ``checkpoints.run_batch`` builds each batch's lineage row from
+    these metrics, doc range (``min_doc``/``max_doc``) included."""
     return results.observe(
-        observation if observation is not None else "extract_metrics",
+        observation,
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_media").alias("media"),
         F.sum("n_errors").alias("errors"),

@@ -156,56 +156,22 @@ def q_mm_media_features(spark, sf_dir):
 
 
 def _sql_mm_media_features() -> str:
-    from ..corpus import (
-        CORRUPT_MOD,
-        MEDIA_FORMATS,
-        SKEW_FACTOR,
-        SKEW_MOD,
-        WORDS_PER_LINE,
-    )
+    from ..corpus import CORPUS_MEDIA_SQL, MEDIA_FORMATS
 
-    w = WORDS_PER_LINE
     fmts = "[" + ", ".join(f"'{f}'" for f in MEDIA_FORMATS) + "]"
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines0
-  FROM base
-), skewed AS (
-  SELECT doc_id, h,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines0) > 0
-              THEN flatten(list_transform(range({SKEW_FACTOR}), r -> lines0))
-              ELSE lines0 END AS lines
-  FROM lined
-), media AS (
-  SELECT doc_id, h,
-         unnest(list_transform(lines, (line, i) -> struct_pack(
-             idx := i - 1,
-             line := line,
-             media_ref := doc_id || '/line-' || (i - 1)::VARCHAR))) AS m
-  FROM skewed
-)
 SELECT doc_id,
-       m.media_ref AS media_ref,
-       CASE WHEN err THEN NULL ELSE
+       media_ref,
+       CASE WHEN is_error THEN NULL ELSE
          list_extract({fmts},
-           CAST(('0x' || substr(sha256(m.media_ref), 1, 8))::BIGINT
+           CAST(('0x' || substr(sha256(media_ref), 1, 8))::BIGINT
                 % {len(MEDIA_FORMATS)} AS INT) + 1) END AS fmt,
-       CAST(CASE WHEN err THEN NULL
-                 ELSE least(320, 64 + 8 * len(m.line)) END AS INT) AS width,
-       CAST(CASE WHEN err THEN NULL ELSE 24 END AS INT) AS height,
-       CAST(CASE WHEN err THEN NULL ELSE 1 END AS INT) AS n_pages,
-       err AS is_error
-FROM (SELECT doc_id, m, (h % {CORRUPT_MOD} = 0 AND m.idx = 0) AS err FROM media)
+       CAST(CASE WHEN is_error THEN NULL
+                 ELSE least(320, 64 + 8 * len(line)) END AS INT) AS width,
+       CAST(CASE WHEN is_error THEN NULL ELSE 24 END AS INT) AS height,
+       CAST(CASE WHEN is_error THEN NULL ELSE 1 END AS INT) AS n_pages,
+       is_error
+FROM ({CORPUS_MEDIA_SQL})
 """
 
 
@@ -296,33 +262,13 @@ def q_mm_frame_sample(spark, sf_dir):
 
 
 def _sql_mm_frame_sample() -> str:
-    from ..corpus import SKEW_FACTOR, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_LINES_SQL
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines0
-  FROM base
-), skewed AS (
-  SELECT doc_id,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines0) > 0
-              THEN flatten(list_transform(range({SKEW_FACTOR}), r -> lines0))
-              ELSE lines0 END AS lines
-  FROM lined
-), docs AS (
+WITH docs AS (
   SELECT doc_id, lines,
          least(320, 64 + 8 * list_max(list_transform(lines, l -> len(l)))) AS width
-  FROM skewed WHERE len(lines) > 0
+  FROM ({CORPUS_LINES_SQL}) WHERE len(lines) > 0
 )
 SELECT doc_id,
        CAST(i AS INT) AS frame_index,
@@ -397,47 +343,19 @@ def q_mm_interleave_pack(spark, sf_dir):
 
 
 def _sql_mm_interleave_pack() -> str:
-    from ..corpus import SKEW_FACTOR, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_SPANS_SQL
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines0
-  FROM base
-), skewed AS (
-  SELECT doc_id,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines0) > 0
-              THEN flatten(list_transform(range({SKEW_FACTOR}), r -> lines0))
-              ELSE lines0 END AS lines
-  FROM lined
-), srows AS (
-  SELECT doc_id, s.kind AS kind, s.off AS off, s.cost AS cost
-  FROM (SELECT doc_id,
-               unnest(flatten(list_transform(lines, (line, i) -> [
-                 struct_pack(kind := 'text',
-                             off := 2 * (i - 1),
-                             cost := len(string_split(line, ' '))),
-                 struct_pack(kind := 'line_image',
-                             off := 2 * (i - 1) + 1,
-                             cost := {MEDIA_TOKEN_COST})]))) AS s
-        FROM skewed)
-), packed AS (
+WITH packed AS (
   SELECT doc_id, kind, off, cost,
          CAST(floor(coalesce(sum(cost) OVER (PARTITION BY doc_id ORDER BY off
                                              ROWS BETWEEN UNBOUNDED PRECEDING
                                              AND 1 PRECEDING), 0)
                     / {SEQ_BUDGET}) AS INT) AS seq_id
-  FROM srows
+  FROM (SELECT doc_id, kind, off,
+               CASE WHEN kind = 'text' THEN len(string_split(text, ' '))
+                    ELSE {MEDIA_TOKEN_COST} END AS cost
+        FROM ({CORPUS_SPANS_SQL}))
 )
 SELECT doc_id, seq_id,
        CAST(count(*) AS INT) AS n_spans,
@@ -503,43 +421,10 @@ def q_mm_caption_align(spark, sf_dir):
 
 
 def _sql_mm_caption_align() -> str:
-    # Mirrors the spanify CTE used by _sql_mm_interleave_pack — keep
-    # the base/lined/skewed stages in sync with corpus.spanify.
-    from ..corpus import SKEW_FACTOR, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_SPANS_SQL
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines0
-  FROM base
-), skewed AS (
-  SELECT doc_id,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines0) > 0
-              THEN flatten(list_transform(range({SKEW_FACTOR}), r -> lines0))
-              ELSE lines0 END AS lines
-  FROM lined
-), srows AS (
-  SELECT doc_id, s.kind AS kind, s.text AS text, s.media_ref AS media_ref,
-         s.off AS off
-  FROM (SELECT doc_id,
-               unnest(flatten(list_transform(lines, (line, i) -> [
-                 struct_pack(kind := 'text', text := line, media_ref := '',
-                             off := 2 * (i - 1)),
-                 struct_pack(kind := 'line_image', text := '',
-                             media_ref := doc_id || '/line-' || (i - 1),
-                             off := 2 * (i - 1) + 1)]))) AS s
-        FROM skewed)
-), aligned AS (
+WITH aligned AS (
   SELECT doc_id, kind, media_ref, off,
          last_value(CASE WHEN kind = 'text' THEN text END IGNORE NULLS)
              OVER (PARTITION BY doc_id ORDER BY off
@@ -549,7 +434,7 @@ WITH base AS (
              OVER (PARTITION BY doc_id ORDER BY off
                    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
              AS cap_after
-  FROM srows
+  FROM ({CORPUS_SPANS_SQL})
 )
 SELECT doc_id, media_ref, CAST(off AS INT) AS offset, cap_before, cap_after
 FROM aligned WHERE kind != 'text'
@@ -733,44 +618,12 @@ def q_mm_phash_clusters(spark, sf_dir):
 
 
 def _sql_mm_phash_clusters() -> str:
-    from ..corpus import (
-        CORRUPT_MOD,
-        SKEW_FACTOR,
-        SKEW_MOD,
-        WORDS_PER_LINE,
-    )
+    from ..corpus import CORPUS_MEDIA_SQL
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines0
-  FROM base
-), skewed AS (
-  SELECT doc_id, h,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines0) > 0
-              THEN flatten(list_transform(range({SKEW_FACTOR}), r -> lines0))
-              ELSE lines0 END AS lines
-  FROM lined
-), media AS (
-  SELECT CASE WHEN h % {CORRUPT_MOD} = 0 AND m.idx = 0 THEN NULL
-              ELSE m.line END AS line,
-         m.media_ref AS media_ref
-  FROM (SELECT doc_id, h,
-               unnest(list_transform(lines, (line, i) -> struct_pack(
-                   idx := i - 1,
-                   media_ref := doc_id || '/line-' || (i - 1)::VARCHAR,
-                   line := line))) AS m
-        FROM skewed)
+WITH media AS (
+  SELECT CASE WHEN is_error THEN NULL ELSE line END AS line, media_ref
+  FROM ({CORPUS_MEDIA_SQL})
 ), groups AS (
   SELECT line, min(media_ref) AS canon
   FROM media WHERE line IS NOT NULL
@@ -830,45 +683,12 @@ def q_mm_phash_dedup(spark, sf_dir):
 
 
 def _sql_mm_phash_dedup() -> str:
-    from ..corpus import (
-        CORRUPT_MOD,
-        SKEW_FACTOR,
-        SKEW_MOD,
-        WORDS_PER_LINE,
-    )
+    from ..corpus import CORPUS_MEDIA_SQL
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines0
-  FROM base
-), skewed AS (
-  SELECT doc_id, h,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines0) > 0
-              THEN flatten(list_transform(range({SKEW_FACTOR}), r -> lines0))
-              ELSE lines0 END AS lines
-  FROM lined
-), media AS (
-  SELECT doc_id,
-         m.media_ref AS media_ref,
-         CASE WHEN h % {CORRUPT_MOD} = 0 AND m.idx = 0 THEN NULL
-              ELSE m.line END AS line
-  FROM (SELECT doc_id, h,
-               unnest(list_transform(lines, (line, i) -> struct_pack(
-                   idx := i - 1,
-                   line := line,
-                   media_ref := doc_id || '/line-' || (i - 1)::VARCHAR))) AS m
-        FROM skewed)
+WITH media AS (
+  SELECT doc_id, media_ref, CASE WHEN is_error THEN NULL ELSE line END AS line
+  FROM ({CORPUS_MEDIA_SQL})
 ), groups AS (
   SELECT line, count(*) AS gsz, min(media_ref) AS canon
   FROM media WHERE line IS NOT NULL GROUP BY line

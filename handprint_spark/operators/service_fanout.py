@@ -107,8 +107,8 @@ def q_xsvc_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(DataFrame.unionByName, branches)
 
 
-# DuckDB re-derivation from the corpus rule (same constants as
-# corpus.py / kernels/decoder.py — single source of truth):
+# DuckDB re-derivation from the corpus rule (corpus.CORPUS_LINES_SQL)
+# and kernels/decoder.py's word confidences:
 #   page lines = 6-word lines, x25 when skewed, minus line 0 when
 #   corrupt (the truncated media decodes to an error span, so the OCR
 #   page text starts at line 1);
@@ -116,33 +116,13 @@ def q_xsvc_results(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   line score = min word conf; google para/word score = line score
 #   (the google.py:174 inherit quirk); microsoft line boxes score 1.0.
 def _sql_xsvc() -> str:
-    from ..corpus import CORRUPT_MOD, SKEW_FACTOR, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_LINES_SQL, CORRUPT_MOD
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines
-  FROM base
-), paged AS (
-  SELECT doc_id, h,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines) > 0
-              THEN flatten(list_transform(range(1, {SKEW_FACTOR + 1}), x -> lines))
-              ELSE lines END AS alllines
-  FROM lined
-), pagelines AS (
+WITH pagelines AS (
   SELECT doc_id,
-         CASE WHEN h % {CORRUPT_MOD} = 0 THEN alllines[2:] ELSE alllines END AS pl
-  FROM paged
+         CASE WHEN h % {CORRUPT_MOD} = 0 THEN lines[2:] ELSE lines END AS pl
+  FROM ({CORPUS_LINES_SQL})
 ), lrows AS (
   SELECT doc_id, u.line AS line, u.i AS li
   FROM (SELECT doc_id,
@@ -217,44 +197,23 @@ def q_flagship_skew_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Closed-form re-derivation (same corpus rule as _sql_xsvc's base CTE):
-# OCR page text = lines joined by \n, minus line 0 when the corrupt
-# slice truncates its media (that span becomes kind='error'); n_media =
-# one media span per line (skew slice repeats lines SKEW_FACTOR x);
+# Closed-form re-derivation from corpus.CORPUS_LINES_SQL: OCR page
+# text = lines joined by \n, minus line 0 when the corrupt slice
+# truncates its media (that span becomes kind='error'); n_media = one
+# media span per line (skew slice repeats lines SKEW_FACTOR x);
 # n_errors = 1 exactly on non-empty corrupt docs.
 def _sql_flagship_skew() -> str:
-    from ..corpus import CORRUPT_MOD, SKEW_FACTOR, SKEW_MOD, WORDS_PER_LINE
+    from ..corpus import CORPUS_LINES_SQL, CORRUPT_MOD
 
-    w = WORDS_PER_LINE
     return f"""
-WITH base AS (
-  SELECT doc_id::VARCHAR AS doc_id,
-         ('0x' || substr(sha256(doc_id::VARCHAR), 1, 8))::BIGINT AS h,
-         CASE WHEN trim(replace(text, chr(12), ' ')) = '' THEN []::VARCHAR[]
-              ELSE string_split(regexp_replace(trim(replace(text, chr(12), ' ')),
-                                               ' +', ' ', 'g'), ' ')
-         END AS words
-  FROM documents
-), lined AS (
-  SELECT doc_id, h,
-         list_transform(range(0, CAST(ceil(len(words) / {w}.0) AS INT)),
-                        i -> array_to_string(words[i*{w}+1 : i*{w}+{w}], ' ')) AS lines
-  FROM base
-), paged AS (
-  SELECT doc_id, h,
-         CASE WHEN h % {SKEW_MOD} = 0 AND len(lines) > 0
-              THEN flatten(list_transform(range(1, {SKEW_FACTOR + 1}), x -> lines))
-              ELSE lines END AS alllines
-  FROM lined
-)
 SELECT doc_id,
        array_to_string(
-         CASE WHEN h % {CORRUPT_MOD} = 0 THEN alllines[2:] ELSE alllines END,
+         CASE WHEN h % {CORRUPT_MOD} = 0 THEN lines[2:] ELSE lines END,
          chr(10)) AS text,
-       CAST(len(alllines) AS INT) AS n_media,
-       CAST(CASE WHEN h % {CORRUPT_MOD} = 0 AND len(alllines) > 0
+       CAST(len(lines) AS INT) AS n_media,
+       CAST(CASE WHEN h % {CORRUPT_MOD} = 0 AND len(lines) > 0
                  THEN 1 ELSE 0 END AS INT) AS n_errors
-FROM paged
+FROM ({CORPUS_LINES_SQL})
 """
 
 

@@ -22,15 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# accepted extensions (reference services/__init__.py:21-22)
-ACCEPTED_FORMATS = ("jpg", "jpeg", "jp2", "pdf", "png", "gif", "bmp", "tif", "tiff")
-
-# the canonical output format (reference handprint/__init__.py:47 _OUTPUT_EXT =
-# '.png'): S4 drops a file only when its .png sibling exists — any
-# other format mix (x.jpg + x.tif, no x.png) keeps ALL files, exactly
-# like the reference's `ext != _OUTPUT_EXT and base + _OUTPUT_EXT in
-# targets` test (main_body.py:174-179)
-_OUTPUT_FMT = "png"
+from ..kernels.formats import ACCEPTED_FORMATS, OUTPUT_FORMAT
 
 
 def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
@@ -74,10 +66,10 @@ def enumerate_targets(files: DataFrame) -> DataFrame:
         .filter(F.col("length") > 0)  # S7 zero-length guard
     )
     png_bases = (
-        base.filter(F.col("ext") == _OUTPUT_FMT).select("base_name").distinct()
+        base.filter(F.col("ext") == OUTPUT_FORMAT).select("base_name").distinct()
     )
-    pngs = base.filter(F.col("ext") == _OUTPUT_FMT)
-    others = base.filter(F.col("ext") != _OUTPUT_FMT).join(
+    pngs = base.filter(F.col("ext") == OUTPUT_FORMAT)
+    others = base.filter(F.col("ext") != OUTPUT_FORMAT).join(
         F.broadcast(png_bases), "base_name", "left_anti"
     )
     return pngs.unionByName(others)

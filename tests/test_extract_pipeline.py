@@ -241,6 +241,63 @@ def test_spanify_empty_text_matches_python_twin(spark):
     assert got["101"] == (0, 0) and got["104"] == (2, 1)
 
 
+def test_corpus_sql_mirror_matches_build_doc(sf_tiny):
+    """The DuckDB mirror of the span rule (CORPUS_SPANS_SQL /
+    CORPUS_MEDIA_SQL, which every corpus-derived oracle reads) yields
+    build_doc's span sequence and media list, with is_error exactly on
+    the corrupt slice's line 0 — on slice-selecting, non-numeric and
+    whitespace-edge documents and on every document of sf0.001. No
+    Spark: this pins the SQL straight to the Python reference."""
+    import pandas as pd
+
+    from handprint_spark.corpus import (
+        CORPUS_MEDIA_SQL,
+        CORPUS_SPANS_SQL,
+        doc_slice_hash,
+    )
+
+    base = [f"doc-{i:04d}" for i in range(4000)]
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    planted = [(d, text) for d in base if doc_slice_hash(d) % 211 == 0][:2]
+    planted += [(d, text) for d in base if doc_slice_hash(d) % 101 == 0][:2]
+    planted += [(d, text) for d in base if doc_slice_hash(d) % 97 == 0][:2]
+    planted += [("a/b:c", text), ("ümlaut-Ø", text), ("doc-xyz", text)]
+    planted += [
+        ("e-empty", ""),
+        ("e-spaces", "   "),
+        ("e-ff", "\f\f"),
+        ("e-mixed", "  one\ttwo  three\nfour\ffive six  seven \f eight\t \n "),
+        ("e-ff-words", "\fa\f\fb c d e f g h\f"),
+    ]
+    planted_docs = pd.DataFrame(planted, columns=["doc_id", "text"])
+    tiny_docs = duckdb.sql(
+        f"select doc_id, text from '{sf_tiny}/documents.parquet'"
+    ).df()
+
+    for docs in (planted_docs, tiny_docs):
+        con = duckdb.connect()
+        con.register("documents", docs)
+        spans, media = {}, {}
+        for d, kind, t, ref, off in con.sql(
+            f"SELECT doc_id, kind, text, media_ref, off FROM ({CORPUS_SPANS_SQL}) "
+            "ORDER BY doc_id, off"
+        ).fetchall():
+            spans.setdefault(d, []).append((kind, t, ref, off))
+        for d, idx, ref, is_error in con.sql(
+            f"SELECT doc_id, idx, media_ref, is_error FROM ({CORPUS_MEDIA_SQL}) "
+            "ORDER BY doc_id, idx"
+        ).fetchall():
+            media.setdefault(d, []).append((idx, ref, is_error))
+        for doc_id, doc_text in zip(docs["doc_id"], docs["text"]):
+            d, exp_spans, exp_media = build_doc(doc_id, doc_text)
+            exp = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in exp_spans]
+            assert spans.get(d, []) == exp, d
+            assert media.get(d, []) == [
+                (i, m["media_ref"], is_corrupt(d) and i == 0)
+                for i, m in enumerate(exp_media)
+            ], d
+
+
 def test_invalidate_caches_drops_zip_finders_and_leaves_zip_importable(tmp_path, monkeypatch):
     """Once the package is imported, importlib.invalidate_caches()
     drops every zipimporter from sys.path_importer_cache, and a module

@@ -18,6 +18,8 @@ Also lints the driver-compare contract: no duplicate column names
 make the comparison ill-defined).
 """
 
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -78,3 +80,20 @@ def test_bnlj_allowlist_is_tight(spark, sf_small):
         assert "BroadcastNestedLoopJoin" in plan, (
             f"{name}: allowlisted but plan no longer contains a nested-loop join"
         )
+
+
+# The DuckDB form of the corpus line split. Oracles read the span rule
+# from corpus.CORPUS_*_SQL; a second copy of this expression is a
+# second statement of the rule that can drift from corpus.spanify.
+CORPUS_SPLIT_SQL = "string_split(regexp_replace(trim(replace(text, chr(12)"
+
+
+def test_corpus_line_split_sql_lives_only_in_corpus():
+    pkg = Path(entry_mod.__file__).resolve().parent / "handprint_spark"
+    holders = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if CORPUS_SPLIT_SQL in p.read_text()
+    )
+    assert holders == ["corpus.py"], (
+        f"corpus line-split SQL found in {holders}: read corpus.CORPUS_LINES_SQL "
+        "(or CORPUS_MEDIA_SQL / CORPUS_SPANS_SQL) instead of pasting the rule"
+    )
