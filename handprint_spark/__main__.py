@@ -21,10 +21,14 @@ Option-by-option mapping (reference flag -> this engine):
   -e  extended results               -> text + JSON sinks (K3)
   -c  compare to ground truth        -> comparison TSV + totals (K4)
   -r  relaxed compare                -> relaxed normalization (C2/C3)
-  -j  reuse prior results            -> checkpoint anti-join resume
-                                        (J3/S8); WITHOUT -j an existing
-                                        results sink is an error (this
-                                        engine never clobbers a sink)
+  -j  reuse prior results            -> checkpoint resume (J3/S8): drop
+                                        the batch an interrupted run
+                                        left without a lineage row from
+                                        every sink, then anti-join; each
+                                        document's outputs exist once.
+                                        WITHOUT -j an existing results
+                                        sink is an error (this engine
+                                        never clobbers a sink)
   -f  read inputs from file          -> doc_id keep-list filter
   -b  base name for outputs          -> output subdirectory prefix (K2)
   -q  quiet                          -> suppress progress prints
@@ -220,13 +224,15 @@ def run_cli(argv: list[str] | None = None) -> int:
 
     out = args.output_dir
     prefix = f"{args.base_name}-" if args.base_name else ""
-    results_dir = os.path.join(out, f"{prefix}results")
-    lineage_dir = os.path.join(out, f"{prefix}lineage")
+
+    def sink(name: str) -> str:
+        return os.path.join(out, f"{prefix}{name}")
+
+    results_dir, lineage_dir = sink("results"), sink("lineage")
 
     from .sources import table_sink
 
-    prior_results = table_sink.load(spark, results_dir)
-    if not args.reuse_results and prior_results is not None:
+    if not args.reuse_results and table_sink.load(spark, results_dir) is not None:
         raise CannotProceed(
             ExitCode.file_error,
             f"{results_dir} already holds results; pass -j to resume "
@@ -235,8 +241,10 @@ def run_cli(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
+    from .operators.compare import comparison_tsv, ground_truth
     from .operators.extract import extracted_text
-    from .sources.checkpoints import run_batch
+    from .operators.render import annotated_media, doc_grids
+    from .sources.checkpoints import next_batch, run_batch
 
     # One keep-list filter shared by every table carrying doc_id
     # (documents, ground truth): a big keep-list is a table, not an
@@ -263,25 +271,13 @@ def run_cli(argv: list[str] | None = None) -> int:
             ).filter(F.col("doc_id").isNotNull())
             return df.join(F.broadcast(typed), "doc_id", "left_semi")
 
-    # Batch ids continue from the lineage table, so a -j resume gets a
-    # FRESH batch id: the per-batch sinks below (extended/compare)
-    # filter on it, and reusing id 0 on resume would re-append the
-    # first run's rows.
-    lineage = table_sink.load(spark, lineage_dir)
-    # Batch ids resume past BOTH sinks' high-water marks: run_batch
-    # appends results BEFORE lineage, so a crash between the two
-    # leaves orphaned results rows at max(lineage)+1 — deriving from
-    # lineage alone would hand that id to a DIFFERENT corpus on
-    # resume, and the per-batch sinks (filter batch_id == N) would
-    # attribute the crashed corpus's rows to it (wrong grid rows,
-    # wrong ground-truth comparison). The parquet max() is a
-    # footer-stats scan, not a data read; it is None on an empty sink.
-    high = [t.agg(F.max("batch_id")).first()[0] for t in (lineage, prior_results) if t is not None]
-    first_batch = max((h for h in high if h is not None), default=-1) + 1
+    # Every sink, whatever this run's flags: a batch an earlier run
+    # left uncommitted may have reached any of them.
+    first_batch = next_batch(spark, lineage_dir, results_dir, *map(
+        sink, ("text", "json", "grid", "annotated", "comparison")))
 
     total_docs = 0
     for offset, corpus in enumerate(args.corpora):
-        batch_id = first_batch + offset
         # keep-list BEFORE spanify: the media-encode UDF is the
         # pipeline's hottest stage, so non-kept docs must be dropped
         # while rows are still (doc_id, text), not after encoding
@@ -289,63 +285,40 @@ def run_cli(argv: list[str] | None = None) -> int:
         if keep_filter is not None:
             docs = keep_filter(docs)
         spans = spanify(docs)
-        metrics = run_batch(spark, spans, results_dir, lineage_dir, batch_id)
+
+        # Each output is derived from the batch's own results rows, so
+        # a -j resume renders and compares only the docs it extracted.
+        outputs = {}
+        if args.extended:
+            outputs[sink("text")] = extracted_text
+            outputs[sink("json")] = lambda r: r.select(
+                "doc_id", F.to_json(F.col("spans")).alias("json"))
+
+        def annotated(r, spans=spans):
+            return annotated_media(
+                spans.join(r.select("doc_id"), "doc_id", "left_semi"),
+                score_threshold=args.confidence, display=display, shift=shift)
+
+        # Rendering is unconditional: -G (reference: skip ONLY the
+        # grid) writes the per-image annotated sink instead.
+        if args.no_grid:
+            outputs[sink("annotated")] = annotated
+        else:
+            outputs[sink("grid")] = lambda r: doc_grids(annotated(r))
+        if args.compare:
+            gt = ground_truth(spark, corpus)
+            if keep_filter is not None:
+                gt = keep_filter(gt)
+            outputs[sink("comparison")] = lambda r, gt=gt: comparison_tsv(
+                extracted_text(r, kinds=("ocr",)).select("doc_id", "text"),
+                gt, relaxed=args.relaxed)
+
+        metrics = run_batch(spark, spans, results_dir, lineage_dir, first_batch + offset, outputs)
         total_docs += metrics["docs"]
         if not args.quiet:
             print(
                 f"{corpus}: {metrics['docs']} documents, "
                 f"{metrics['media']} media, {metrics['errors']} errors"
-            )
-
-        results = table_sink.load(spark, results_dir).filter(
-            F.col("batch_id") == batch_id
-        )
-
-        if args.extended:
-            text_dir = os.path.join(out, f"{prefix}text")
-            json_dir = os.path.join(out, f"{prefix}json")
-            table_sink.append(extracted_text(results), text_dir)
-            table_sink.append(
-                results.select("doc_id", F.to_json(F.col("spans")).alias("json")),
-                json_dir,
-            )
-
-        # Rendering is unconditional: the default run writes the grid
-        # sink, and -G (reference: skip ONLY the grid) switches to the
-        # per-image annotated sink. The old `or not args.no_grid` gate
-        # made plain `-G` (default display/confidence) skip BOTH sinks
-        # — the user asked to skip the grid and silently got no
-        # rendered output at all.
-        from .operators.render import annotated_media, doc_grids
-
-        # render only THIS batch's docs: rendering from the full
-        # corpus would re-append every prior row to the grid/
-        # annotated sinks on a -j resume (and re-pay the render)
-        annotated = annotated_media(
-            spans.join(results.select("doc_id"), "doc_id", "left_semi"),
-            score_threshold=args.confidence,
-            display=display,
-            shift=shift,
-        )
-        if not args.no_grid:
-            table_sink.append(
-                doc_grids(annotated), os.path.join(out, f"{prefix}grid")
-            )
-        else:
-            table_sink.append(
-                annotated, os.path.join(out, f"{prefix}annotated")
-            )
-
-        if args.compare:
-            from .operators.compare import comparison_tsv, ground_truth
-
-            htr = extracted_text(results, kinds=("ocr",)).select("doc_id", "text")
-            gt = ground_truth(spark, corpus)
-            if keep_filter is not None:
-                gt = keep_filter(gt)
-            table_sink.append(
-                comparison_tsv(htr, gt, relaxed=args.relaxed),
-                os.path.join(out, f"{prefix}comparison"),
             )
 
     if not args.quiet:

@@ -189,7 +189,6 @@ def observed(results: DataFrame, observation) -> DataFrame:
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_media").alias("media"),
         F.sum("n_errors").alias("errors"),
-        F.max("n_media").alias("max_media_per_doc"),
         F.min("doc_id").alias("min_doc"),
         F.max("doc_id").alias("max_doc"),
     )

@@ -650,9 +650,11 @@ def q_ta_len_quantiles_approx(spark, sf_dir):
 # strip — re-expressed for the span corpus: a LINE that recurs across
 # many documents of the same source is chrome (header/footer/nav), not
 # content; the classic line-frequency heuristic (CCNet / jusText
-# lineage). Lines here are the corpus's own WORDS_PER_LINE
-# segmentation (the same rule the span builder uses), so the operator
-# works on the text column in both engines without private state.
+# lineage). Lines here are runs of WORDS_PER_LINE words of the text
+# split on single spaces. That is not quite the span builder's rule
+# (corpus.split_lines also strips form feeds and collapses runs of
+# spaces); the two agree on text with neither. The operator works on
+# the text column in both engines without private state.
 # Shape: one explode → one (source, line) groupBy on a well-spread key
 # → one membership join back — posting-list form again, no n².
 

@@ -8,15 +8,20 @@ runtime jars, so the sink routes by target *shape*:
     sandbox stand-in;
   * a catalog identifier (``db.results``, ``iceberg.prod.results``) →
     the DataFrameWriterV2 (``df.writeTo``) path. Against an Iceberg
-    catalog this is a snapshot-committing append; the checkpoint
-    protocol's "results + lineage committed atomically" story
-    (checkpoints.py) becomes real by wrapping the two appends in one
-    Iceberg transaction on a cluster. Against the built-in session
-    catalog (tested here) it creates/appends a managed parquet table —
-    same API surface, weaker commit semantics.
+    catalog this is a snapshot-committing append. Against the built-in
+    session catalog (tested here) it creates/appends a managed parquet
+    table — same API surface, weaker commit semantics.
 
 Only the writer changes per target; every operator upstream is
 unchanged (they produce DataFrames, the sink decides durability).
+
+A batched sink holds one partition per checkpoint batch:
+``append_batch`` writes ``<path>/batch_id=<id>/`` (readers see
+``batch_id`` as a partition column) or a table's ``batch_id``
+partition, and ``drop_batches`` deletes a batch and every later one.
+That is all the checkpoint protocol (checkpoints.py) needs to redo an
+uncommitted batch whole: whether a batch is committed is decided by
+its lineage row alone, never by the sinks.
 
 ``append_row`` commits one driver-side row (a batch's lineage) without
 a Python stage: on a path the driver writes it as a parquet file
@@ -62,6 +67,40 @@ def append(df: DataFrame, target: str) -> None:
         # the built-in session catalog's V1 tables lack the V2 batch
         # append capability — same append through the V1 writer
         df.write.mode("append").saveAsTable(target)
+
+
+def append_batch(df: DataFrame, target: str, batch_id: int) -> None:
+    """Append ``df`` as batch ``batch_id`` of ``target``: on a path
+    into ``<target>/batch_id=<id>/``, on a catalog table into its
+    ``batch_id`` partition (a new table is created partitioned by
+    it). A ``batch_id`` column of ``df`` is replaced by the batch's."""
+    if is_path(target):
+        df.drop("batch_id").write.mode("append").parquet(f"{target}/batch_id={batch_id}")
+        return
+    spark, batch = df.sparkSession, df.withColumn("batch_id", F.lit(batch_id))
+    if not spark.catalog.tableExists(target):
+        batch.writeTo(target).using("parquet").partitionedBy(F.col("batch_id")).create()
+    else:
+        # insertInto matches columns by position: put them in the table's order
+        batch.select(*spark.table(target).columns).write.insertInto(target)
+
+
+def drop_batches(spark: SparkSession, target: str, first: int) -> None:
+    """Delete every batch of ``target`` whose id is ``first`` or more;
+    a missing target has none. On a path this is a ``FileSystem`` glob
+    and delete (no Spark job); on a table, a partition drop."""
+    if not is_path(target):
+        if spark.catalog.tableExists(target):
+            specs = [f"PARTITION ({p})" for (p,) in spark.sql(f"SHOW PARTITIONS {target}").collect()
+                     if int(p.split("=", 1)[1]) >= first]
+            if specs:
+                spark.sql(f"ALTER TABLE {target} DROP IF EXISTS {', '.join(specs)}")
+        return
+    fs, pattern = _fs_path(spark, target, "batch_id=*")
+    for status in fs.globStatus(pattern) or ():
+        path = status.getPath()
+        if int(path.getName().split("=", 1)[1]) >= first:
+            fs.delete(path, True)
 
 
 def _fs_path(spark: SparkSession, target: str, *children: str):

@@ -2,9 +2,15 @@
 as python -m handprint_spark): option validation, exit codes, and the
 end-to-end pipeline sinks."""
 
+import ast
 import os
+import shutil
 
 import pytest
+from pyspark.sql import DataFrameWriter
+
+from handprint_spark.corpus import is_skewed
+from handprint_spark.sources import table_sink
 
 from handprint_spark.__main__ import run_cli
 from handprint_spark.errors import CannotProceed, ExitCode, run_with_exit_code
@@ -142,37 +148,6 @@ def test_from_file_tolerates_non_numeric_ids(spark, sf_tiny, tmp_path):
     assert run_cli(["-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 1
 
 
-def test_resume_skips_orphaned_results_batch_id(spark, sf_tiny, tmp_path):
-    """A crash between the results append and the lineage append
-    leaves orphaned results rows at max(lineage)+1; a resume must
-    allocate PAST both sinks' high-water marks or the next corpus
-    inherits the crashed batch's id and its per-batch sinks pick up
-    the orphaned rows."""
-    import pyspark.sql.functions as F
-
-    docs = spark.read.parquet(f"{sf_tiny}/documents.parquet").limit(2).collect()
-    keep = tmp_path / "keep.txt"
-    keep.write_text(str(docs[0].doc_id))
-    out = str(tmp_path / "out")
-    assert run_cli(["-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 1
-
-    results_dir = os.path.join(out, "results")
-    # orphan: a results row at batch_id 7 with NO lineage row (the
-    # crash window), belonging to a doc outside the keep list
-    prior = spark.read.parquet(results_dir)
-    orphan = (
-        prior.limit(1)
-        .withColumn("doc_id", F.lit("orphan-doc"))
-        .withColumn("batch_id", F.lit(7).cast(dict(prior.dtypes)["batch_id"]))
-    )
-    orphan.write.mode("append").parquet(results_dir)
-
-    keep.write_text(str(docs[1].doc_id))
-    assert run_cli(["-j", "-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 1
-    lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lineage.agg(F.max("batch_id")).first()[0] == 8  # past the orphan
-
-
 def test_resume_after_a_first_run_that_kept_no_document(spark, sf_tiny, tmp_path):
     """A first run whose -f keep-list matches no document commits a
     results sink with zero rows and no lineage row; its high-water
@@ -191,3 +166,117 @@ def test_resume_after_a_first_run_that_kept_no_document(spark, sf_tiny, tmp_path
     lineage = spark.read.parquet(os.path.join(out, "lineage")).collect()
     assert [(r.batch_id, r.n_docs) for r in lineage] == [(0, 1)]
     assert [r.batch_id for r in spark.read.parquet(results_dir).collect()] == [0]
+
+
+def test_cli_writes_every_sink_through_run_batch():
+    """The CLI appends to no sink itself: every sink it writes goes
+    through checkpoints.run_batch, whose lineage row commits the batch
+    after all of them, so a resume can drop an uncommitted batch."""
+    import handprint_spark.__main__ as cli
+
+    tree = ast.parse(open(cli.__file__).read())
+    calls = [
+        n.func.attr for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and isinstance(n.func.value, ast.Name) and n.func.value.id == "table_sink"
+    ]
+    assert not {"append", "append_batch", "append_row"} & set(calls), calls
+
+
+# -- crash injection ---------------------------------------------------------
+# A first run commits batch 0 (four docs); a -j run over eight docs
+# crashes inside batch 1 at one boundary; a second -j run resumes. Every
+# sink must then equal that of a run whose batch 1 never crashed.
+
+CRASH_SINKS = ("results", "lineage", "text", "json", "grid", "comparison")
+
+
+class Crash(Exception):
+    pass
+
+
+def _cli(out, keep, sf, *flags):
+    return run_cli([*flags, "-e", "-c", "-q", "-t", "4", "-o", out, "-f", str(keep), sf])
+
+
+def _sink_rows(spark, path):
+    return sorted(repr(sorted(r.asDict(recursive=True).items()))
+                  for r in spark.read.parquet(path).collect())
+
+
+@pytest.fixture(scope="module")
+def crash_base(spark, sf_tiny, tmp_path_factory):
+    """(root, the first run's output, the uninterrupted output, the
+    eight-doc keep list)."""
+    root = tmp_path_factory.mktemp("crash")
+    ids = [str(r.doc_id) for r in spark.read.parquet(f"{sf_tiny}/documents.parquet")
+           .select("doc_id").orderBy("doc_id").limit(40).collect()]
+    ids = [d for d in ids if not is_skewed(d)][:8]
+    assert len(ids) == 8
+    first, both = root / "first.txt", root / "both.txt"
+    first.write_text("\n".join(ids[:4]))
+    both.write_text("\n".join(ids))
+    base, ref = str(root / "base"), str(root / "ref")
+    assert _cli(base, first, sf_tiny) == 4
+    shutil.copytree(base, ref)
+    assert _cli(ref, both, sf_tiny, "-j") == 4
+    return root, base, ref, both
+
+
+def _crash_on_write(monkeypatch, target):
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path == target or path.startswith(target + "/"):
+            raise Crash(path)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _crash_on_row(monkeypatch, target):
+    orig = table_sink.append_row
+
+    def append_row(spark, values, schema, to):
+        if to == target:
+            raise Crash(to)
+        return orig(spark, values, schema, to)
+
+    monkeypatch.setattr(table_sink, "append_row", append_row)
+
+
+@pytest.mark.parametrize(
+    "boundary",
+    ["before-results", "inside-results", "results-lineage", "results-text", "results-grid"],
+)
+def test_crashed_batch_is_redone_whole(spark, sf_tiny, crash_base, monkeypatch, boundary):
+    """Wherever batch 1 crashes before its lineage row, a -j resume
+    redoes it whole: no sink loses a row or holds one twice, and the
+    next batch never carries the crashed batch's rows."""
+    root, base, ref, both = crash_base
+    out = str(root / boundary)
+    shutil.copytree(base, out)
+    if boundary == "inside-results":
+        # a results job that committed some files of batch 1, then died
+        (spark.read.parquet(os.path.join(ref, "results")).filter("batch_id = 1").limit(2)
+         .drop("batch_id").write.parquet(os.path.join(out, "results", "batch_id=1")))
+    else:
+        with monkeypatch.context() as m:
+            if boundary == "results-lineage":
+                _crash_on_row(m, os.path.join(out, "lineage"))
+            else:
+                sub = {"before-results": "results", "results-text": "text",
+                       "results-grid": "grid"}[boundary]
+                _crash_on_write(m, os.path.join(out, sub))
+            with pytest.raises(Crash):
+                _cli(out, both, sf_tiny, "-j")
+    assert _cli(out, both, sf_tiny, "-j") == 4
+
+    for sub in CRASH_SINKS:
+        path = os.path.join(out, sub)
+        assert _sink_rows(spark, path) == _sink_rows(spark, os.path.join(ref, sub)), sub
+        if sub != "lineage":
+            ids = [r.doc_id for r in spark.read.parquet(path).select("doc_id").collect()]
+            assert len(ids) == len(set(ids)) == 8, sub
+    lineage = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    assert sorted(r.batch_id for r in lineage) == [0, 1]

@@ -224,3 +224,38 @@ def test_load_of_missing_sink_reads_nothing(spark, tmp_path, monkeypatch):
     assert table_sink.load(spark, str(tmp_path / "missing")) is None
     assert table_sink.load(spark, str(tmp_path / "crashed")) is None
     assert table_sink.load(spark, "hp_missing_table") is None
+
+
+@pytest.mark.parametrize("kind", ["path", "table"])
+def test_next_batch_drops_uncommitted_batches(spark, sf_tiny, tmp_path, kind):
+    """next_batch returns the id after the last lineage row and first
+    drops that batch and every later one from each sink, on a path
+    (directory delete) and on a catalog table (partition drop)."""
+    from handprint_spark.sources import table_sink
+    from handprint_spark.sources.checkpoints import next_batch
+
+    if kind == "path":
+        results, lineage = str(tmp_path / "results"), str(tmp_path / "lineage")
+    else:
+        results, lineage = "hp_results_nb", "hp_lineage_nb"
+        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        for t in (results, lineage):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+    try:
+        spans = _spans(spark, sf_tiny)
+        assert next_batch(spark, lineage, results) == 0
+        run_batch(spark, spans.limit(20), results, lineage, batch_id=0)
+        committed = table_sink.load(spark, results).count()
+        # batches 1 and 2 reached the results sink but wrote no lineage row
+        for b in (1, 2):
+            extra = extract_documents(spans.limit(10 * b)).withColumn("partition_id", F.lit(0))
+            table_sink.append_batch(extra, results, b)
+        assert table_sink.load(spark, results).count() == committed + 30
+        assert next_batch(spark, lineage, results) == 1
+        assert [r.batch_id for r in table_sink.load(spark, results).select("batch_id").distinct().collect()] == [0]
+        assert table_sink.load(spark, results).count() == committed == 20
+    finally:
+        if kind == "table":
+            spark.sql(f"DROP TABLE IF EXISTS {results}")
+            spark.sql(f"DROP TABLE IF EXISTS {lineage}")
