@@ -96,11 +96,7 @@ def run_batch(
     table. Every target may be a parquet path or a catalog table
     identifier (table_sink)."""
     obs = Observation()
-    results = observed(
-        extract_documents(pending_work(spark, spans_df, results_dir))
-        .withColumn("partition_id", F.spark_partition_id()),
-        obs,
-    )
+    results = observed(extract_documents(pending_work(spark, spans_df, results_dir)), obs)
     table_sink.append_batch(results, results_dir, batch_id)
     m = obs.get
     docs, media, errors = m["docs"], int(m["media"] or 0), int(m["errors"] or 0)

@@ -28,6 +28,22 @@ a Python stage: on a path the driver writes it as a parquet file
 through the session's Hadoop ``FileSystem`` (no Spark job at all); on
 a catalog table it appends a JVM literal row.
 
+The sink decides the codec too. Every parquet file it writes (path
+appends, catalog tables, the lineage row) is zstd at level 3, zstd's
+own default, and the level Spark's parquet writer uses unasked:
+
+  * zstd, not Spark's default Snappy: it is the codec Iceberg writes
+    by default, and a committed document stores a third fewer bytes
+    (perfbench bulk: 424 → 279 B) for the same write CPU once the JVM
+    is warm; pyarrow, DuckDB and Spark all read it;
+  * level 3, not higher: level 19 saves 9% more bytes for about
+    eight times the write CPU.
+
+A catalog table is created with the codec as a writer option, which
+the catalog keeps with the table, so every later append and
+``insertInto`` writes zstd as well (a ``tableProperty`` never reaches
+the parquet writer: the table's files come out Snappy).
+
 ``load`` tests existence (``FileSystem`` on paths, ``tableExists`` on
 tables) instead of catching the failed analysis: an analysis failure
 also makes the ``Observation`` listener log a long JVM stack trace.
@@ -46,6 +62,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 from pyspark.sql.utils import AnalysisException
 
+# every parquet file a sink writes (module docstring); Spark's writer
+# takes zstd's level 3 unasked, pyarrow's would take 1
+CODEC, CODEC_LEVEL = "zstd", 3
+
 
 def is_path(target: str) -> bool:
     return "/" in target or target.startswith(("file:", "s3:", "s3a:", "hdfs:"))
@@ -55,10 +75,10 @@ def append(df: DataFrame, target: str) -> None:
     """Append ``df`` to a parquet path or a catalog table (created on
     first append; an Iceberg catalog supplies its own table format)."""
     if is_path(target):
-        df.write.mode("append").parquet(target)
+        df.write.mode("append").parquet(target, compression=CODEC)
         return
     if not df.sparkSession.catalog.tableExists(target):
-        df.writeTo(target).using("parquet").create()
+        _create(df.writeTo(target))
         return
     try:
         # V2 writer: on an Iceberg table this is a snapshot commit
@@ -75,14 +95,20 @@ def append_batch(df: DataFrame, target: str, batch_id: int) -> None:
     ``batch_id`` partition (a new table is created partitioned by
     it). A ``batch_id`` column of ``df`` is replaced by the batch's."""
     if is_path(target):
-        df.drop("batch_id").write.mode("append").parquet(f"{target}/batch_id={batch_id}")
+        df.drop("batch_id").write.mode("append").parquet(f"{target}/batch_id={batch_id}",
+                                                         compression=CODEC)
         return
     spark, batch = df.sparkSession, df.withColumn("batch_id", F.lit(batch_id))
     if not spark.catalog.tableExists(target):
-        batch.writeTo(target).using("parquet").partitionedBy(F.col("batch_id")).create()
+        _create(batch.writeTo(target).partitionedBy(F.col("batch_id")))
     else:
         # insertInto matches columns by position: put them in the table's order
         batch.select(*spark.table(target).columns).write.insertInto(target)
+
+
+def _create(writer) -> None:
+    """Create a parquet catalog table whose appends all write ``CODEC``."""
+    writer.using("parquet").option("compression", CODEC).create()
 
 
 def drop_batches(spark: SparkSession, target: str, first: int) -> None:
@@ -127,7 +153,8 @@ def append_row(spark: SparkSession, values: tuple, schema: str, target: str) -> 
         append(row, target)
         return
     buf = pa.BufferOutputStream()
-    pq.write_table(pa.table([[v] for v in values], schema=to_arrow_schema(struct)), buf)
+    pq.write_table(pa.table([[v] for v in values], schema=to_arrow_schema(struct)), buf,
+                   compression=CODEC, compression_level=CODEC_LEVEL)
     name = f"part-{uuid.uuid4()}.parquet"
     fs, tmp = _fs_path(spark, target, f".{name}.tmp")
     out = fs.create(tmp, False)

@@ -3,9 +3,11 @@ as python -m handprint_spark): option validation, exit codes, and the
 end-to-end pipeline sinks."""
 
 import ast
+import glob
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import DataFrameWriter
 
@@ -111,6 +113,15 @@ def test_end_to_end_run_resume_and_compare(spark, sf_tiny, tmp_path, capsys):
     rows = spark.read.parquet(os.path.join(out, "comparison")).collect()
     assert len(rows) == n
     assert all("\t" in r.report for r in rows if r.report)
+
+    # every sink is zstd parquet, column chunk by column chunk
+    for sub in ("results", "lineage", "text", "json", "grid", "comparison"):
+        files = glob.glob(os.path.join(out, sub, "**", "*.parquet"), recursive=True)
+        assert files, sub
+        codecs = {md.row_group(g).column(c).compression
+                  for md in map(pq.read_metadata, files)
+                  for g in range(md.num_row_groups) for c in range(md.num_columns)}
+        assert codecs == {"ZSTD"}, (sub, codecs)
 
 
 def test_from_file_filter(spark, sf_tiny, tmp_path):

@@ -1,10 +1,12 @@
 """Checkpoint/lineage resume protocol (SURVEY §2.1 S8 / §2.3 J3):
 kill-and-restart must converge to the same table a single run makes."""
 
+import glob
 import re
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,7 +59,8 @@ def test_partial_then_resume_equals_single_run(spark, sf_tiny, dirs):
 def test_catalog_table_sink_resume(spark, sf_tiny):
     """Same protocol against catalog TABLE identifiers (the Iceberg
     path on a cluster; the built-in session catalog here): writeTo
-    create-then-append, anti-join against the table, idempotent."""
+    create-then-append, anti-join against the table, idempotent; every
+    batch's files are zstd parquet."""
     # the in-memory catalog forgets tables between sessions but their
     # warehouse files persist — clear both metadata AND files
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
@@ -70,6 +73,13 @@ def test_catalog_table_sink_resume(spark, sf_tiny):
         assert m1["docs"] == 30
         m2 = run_batch(spark, spans, "hp_results_t", "hp_lineage_t", batch_id=1)
         assert m2["docs"] == spans.count() - 30
+        # the second batch appends through insertInto: it keeps the codec
+        # the table was created with
+        files = glob.glob(f"{warehouse}/hp_results_t/batch_id=1/*.parquet")
+        codecs = {md.row_group(g).column(c).compression
+                  for md in map(pq.read_metadata, files)
+                  for g in range(md.num_row_groups) for c in range(md.num_columns)}
+        assert files and codecs == {"ZSTD"}, codecs
         m3 = run_batch(spark, spans, "hp_results_t", "hp_lineage_t", batch_id=2)
         assert m3["docs"] == 0
         assert spark.read.table("hp_results_t").count() == spans.count()
@@ -249,8 +259,7 @@ def test_next_batch_drops_uncommitted_batches(spark, sf_tiny, tmp_path, kind):
         committed = table_sink.load(spark, results).count()
         # batches 1 and 2 reached the results sink but wrote no lineage row
         for b in (1, 2):
-            extra = extract_documents(spans.limit(10 * b)).withColumn("partition_id", F.lit(0))
-            table_sink.append_batch(extra, results, b)
+            table_sink.append_batch(extract_documents(spans.limit(10 * b)), results, b)
         assert table_sink.load(spark, results).count() == committed + 30
         assert next_batch(spark, lineage, results) == 1
         assert [r.batch_id for r in table_sink.load(spark, results).select("batch_id").distinct().collect()] == [0]
