@@ -63,11 +63,7 @@ if __package__ in (None, ""):  # pragma: no cover — spark-submit path
 
 from . import __version__
 from .errors import CannotProceed, ExitCode, run_with_exit_code
-
-KNOWN_DISPLAYS = (
-    "text", "bb", "bb-word", "bb-words", "bb-line", "bb-lines",
-    "bb-para", "bb-paragraph", "bb-paragraphs",
-)
+from .kernels.render import POSSIBLE_DISPLAYS
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -139,12 +135,12 @@ def _parse_services(arg: str) -> list[str]:
 
 def _parse_display(arg: str) -> tuple[str, ...]:
     names = tuple(d.strip() for d in arg.split(",") if d.strip())
-    unknown = [d for d in names if d not in KNOWN_DISPLAYS]
+    unknown = [d for d in names if d not in POSSIBLE_DISPLAYS]
     if unknown:
         raise CannotProceed(
             ExitCode.bad_arg,
             f"unknown display value(s): {', '.join(unknown)} "
-            f"(known: {', '.join(KNOWN_DISPLAYS)})",
+            f"(known: {', '.join(POSSIBLE_DISPLAYS)})",
         )
     return names
 

@@ -49,10 +49,6 @@ class UserCancelled(EngineException):
     """The user cancelled the run (exceptions.py:35)."""
 
 
-class NetworkFailure(EngineException):
-    """Unrecoverable network problem (exceptions.py:39)."""
-
-
 class NoContent(EngineException):
     """No content at the given location (exceptions.py:43) — ROW level."""
 
@@ -69,16 +65,6 @@ class AuthFailure(EngineException):
 
 class ServiceFailure(EngineException):
     """Unrecoverable remote-service problem (exceptions.py:55)."""
-
-
-class RateLimitExceeded(EngineException):
-    """Service rate limit hit (exceptions.py:59); the reference's
-    manager backs off and retries (manager.py:293-299) — the streaming
-    analog here is maxFilesPerTrigger pacing."""
-
-
-class InternalError(EngineException):
-    """Unrecoverable engine-internal problem (exceptions.py:63)."""
 
 
 # Row-level failures become error VALUES in the output table; all other

@@ -255,17 +255,6 @@ def resize_media(data: bytes, new_width: int, new_height: int) -> bytes:
     )
 
 
-def grayscale_media(data: bytes) -> bytes:
-    """Grayscale stage (new-engine stage per SURVEY.md §2.8 north-star
-    note; no reference counterpart). HPM1 pixels are already single
-    channel, so this validates + canonicalizes the object."""
-    info = decode_media(data)
-    return encode_media(
-        info.text, fmt=info.fmt, width=info.width, height=info.height,
-        binarized=bool(info.flags & FLAG_BINARIZED),
-    )
-
-
 def binarize_media(data: bytes) -> bytes:
     """Adaptive-binarization stage (new-engine stage, SURVEY.md §2.8):
     thresholds the deterministic render at 128 and sets the flag."""

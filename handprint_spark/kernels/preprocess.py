@@ -9,10 +9,11 @@ order exactly:
   3. byte-size-reduce when over the folded max size
      (manager.py:368-372);
 
-plus the two new-engine stages (grayscale, adaptive binarization —
-SURVEY.md §2.8 north-star note, no reference counterpart), fused so the
-object is decoded once and re-encoded once per stage boundary rather
-than round-tripping through temp files.
+plus the new-engine adaptive binarization (SURVEY.md §2.8 north-star
+note, no reference counterpart; HPM1 pixels are single-channel, so
+grayscale needs no stage), fused so the object is decoded once and
+re-encoded once per stage boundary rather than round-tripping through
+temp files.
 
 Errors are returned as values, never raised (the reference's
 row-vs-job error policy): ``normalize_media_bytes`` returns

@@ -28,6 +28,7 @@ LABEL_BG = 32  # the white-alpha-0.8 text background box, grayscale analog
 LABEL_H = 6
 LABEL_CHAR_W = 4
 
+# the display values the CLI accepts (``-d``), in resolve_display's terms
 POSSIBLE_DISPLAYS = (
     "text", "bb", "bb-word", "bb-words", "bb-line", "bb-lines",
     "bb-para", "bb-paragraph", "bb-paragraphs",

@@ -37,6 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.table_sink import CODEC
 from .similarity import (
     IVF_NPROBE,
     _centroid_matrix,
@@ -82,7 +83,7 @@ def build_ann_index(
         emb.withColumn("bucket", bucket(F.col("v")))
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(index_dir)
+        .parquet(index_dir, compression=CODEC)
     )
     return index_dir
 
@@ -142,7 +143,7 @@ def build_ivf_index(
         emb.withColumn("cent_id", assign(F.col("v")))
         .write.mode("overwrite")
         .partitionBy("cent_id")
-        .parquet(index_dir)
+        .parquet(index_dir, compression=CODEC)
     )
     return index_dir
 

@@ -196,20 +196,17 @@ def observed(results: DataFrame, observation) -> DataFrame:
 
 def extracted_text(results: DataFrame, kinds: tuple[str, ...] = ("text", "ocr")) -> DataFrame:
     """Reading-order document text from a results table: the selected
-    span kinds joined with newlines in offset order — pure JVM (array
-    functions), no Python. For ground-truth comparison pass
-    ``kinds=("ocr",)`` (the recognized text alone — the analog of
-    TRResult.text)."""
+    span kinds joined with newlines — pure JVM (array functions), no
+    Python. Every extraction path (``extract_documents``,
+    ``extract_skew_aware``) returns a document's spans in
+    ``extract_one``'s order, so this keeps their order and sorts
+    nothing. For ground-truth comparison pass ``kinds=("ocr",)`` (the
+    recognized text alone — the analog of TRResult.text)."""
     kinds_sql = ", ".join(f"'{k}'" for k in kinds)
-    ordered = F.array_sort(
-        F.expr(f"filter(spans, s -> s.kind in ({kinds_sql}))"),
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1)
-        .otherwise(0),
-    )
+    texts = F.expr(f"transform(filter(spans, s -> s.kind in ({kinds_sql})), s -> s.text)")
     return results.select(
         "doc_id",
-        F.array_join(F.transform(ordered, lambda s: s["text"]), "\n").alias("text"),
+        F.array_join(texts, "\n").alias("text"),
         "n_media",
         "n_errors",
     )

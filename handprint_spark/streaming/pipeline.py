@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from ..corpus import spanify
 from ..operators.extract import extract_documents
+from ..sources.table_sink import CODEC
 
 
 def _read_doc_stream(
@@ -601,7 +602,7 @@ def stream_incremental_dedup(
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("ingest_batch")
-            .parquet(verdict_dir)
+            .parquet(verdict_dir, compression=CODEC)
         )
         accepted = batch_df.join(
             verdicts.filter(~F.col("dup_of_index")).select("doc_id"),
@@ -614,7 +615,7 @@ def stream_incremental_dedup(
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("ingest_batch")
-            .parquet(index_dir)
+            .parquet(index_dir, compression=CODEC)
         )
 
     return (

@@ -5,11 +5,12 @@ and skew-aware extraction returns identical results."""
 
 import re
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from handprint_spark.corpus import load_documents_spans
-from handprint_spark.operators.extract import extract_documents
+from handprint_spark.operators.extract import extract_documents, extract_one
 from handprint_spark.operators.relational import (
     q_j1_broadcast_join,
     q_s2_whitelist_filter,
@@ -224,6 +225,65 @@ def test_skew_aware_duplicate_ref_picks_later_object(spark):
     assert row.n_errors == 0
 
 
+def _layout_one_null_offset():
+    # refs descend as offsets ascend, and one span has no offset
+    spans = [_media_span(_ref(9 - i), i) for i in range(10)]
+    spans[3] = _media_span(_ref(6), None)
+    return spans, [_media_obj(i) for i in range(10)]
+
+
+def _layout_two_null_offsets():
+    spans = [_text_span("head", None)] + [_media_span(_ref(i), i) for i in range(10)]
+    spans[7] = _media_span(_ref(6), None)
+    return spans, [_media_obj(i) for i in range(10)]
+
+
+def _layout_offsets_tied_across_chunks():
+    # refs descend as offsets ascend, two spans per offset
+    return ([_media_span(_ref(9 - i), i // 2) for i in range(10)],
+            [_media_obj(i) for i in range(10)])
+
+
+def _layout_text_and_media_share_offset():
+    spans = [_media_span(_ref(i), 2 * i) for i in range(10)]
+    spans.insert(5, _text_span("tied", 8))
+    return spans, [_media_obj(i) for i in range(10)]
+
+
+def _layout_null_media_list():
+    return [_media_span(_ref(i), i) for i in range(10)], None
+
+
+def _layout_null_spans_list():
+    return None, [_media_obj(i) for i in range(10)]
+
+
+def _layouts():
+    from test_extract_pipeline import NULL_LAYOUTS
+
+    heavy = (_layout_one_null_offset, _layout_two_null_offsets,
+             _layout_offsets_tied_across_chunks, _layout_text_and_media_share_offset,
+             _layout_null_media_list, _layout_null_spans_list)
+    return {**{f.__name__[len("_layout_"):]: f() for f in heavy},
+            **{name: (spans, media) for name, (spans, media, _, _) in NULL_LAYOUTS.items()}}
+
+
+LAYOUTS = _layouts()
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_skew_aware_returns_extract_one_spans(spark, layout):
+    """Every heavy doc comes back from the skew path once, with
+    extract_one's spans in extract_one's order, whether or not its
+    offsets alone order its spans (threshold 0, chunks of 1 media)."""
+    spans, media = LAYOUTS[layout]
+    df = _heavy_doc(spark, spans, media)
+    rows = extract_skew_aware(df, media_per_chunk=1, skew_threshold=0).collect()
+    _, exp, n_media, n_errors = extract_one("hdoc", spans, media)
+    assert [([s.asDict() for s in r.spans], r.n_media, r.n_errors) for r in rows] == [
+        (exp, n_media, n_errors)]
+
+
 def test_skew_chunks_spread_over_partitions(spark):
     """One heavy doc's chunk rows (12 media, k=2: 6 chunks) land in two
     or more partitions on local[4], behind an Exchange on
@@ -310,6 +370,11 @@ def test_ann_index_probe_partition_prunes(spark, sf_small, tmp_path):
     from handprint_spark.operators.similarity import _query_vec, bucket_of
 
     index_dir = build_ann_index(spark, sf_small, index_dir=str(tmp_path / "lsh"))
+    files = list((tmp_path / "lsh").rglob("*.parquet"))
+    codecs = {md.row_group(g).column(c).compression
+              for md in map(pq.read_metadata, files)
+              for g in range(md.num_row_groups) for c in range(md.num_columns)}
+    assert files and codecs == {"ZSTD"}, codecs  # the table sink's codec
     qv = _query_vec(spark, sf_small, 0)
     probe = probe_lsh(spark, index_dir, qv, exclude_vec_id=0, prune="filter")
     plan = plan_str(probe)

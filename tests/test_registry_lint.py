@@ -18,6 +18,8 @@ Also lints the driver-compare contract: no duplicate column names
 make the comparison ill-defined).
 """
 
+import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -97,3 +99,64 @@ def test_corpus_line_split_sql_lives_only_in_corpus():
         f"corpus line-split SQL found in {holders}: read corpus.CORPUS_LINES_SQL "
         "(or CORPUS_MEDIA_SQL / CORPUS_SPANS_SQL) instead of pasting the rule"
     )
+
+
+# a two-argument SQL lambda, the comparator form of array_sort
+SQL_COMPARATOR = re.compile(r",\s*\(\s*\w+\s*,\s*\w+\s*\)\s*->")
+
+
+def _sql_array_sorts(text: str):
+    """Each ``array_sort(...)`` call in a SQL string, up to its closing
+    parenthesis (or the end of the string)."""
+    for m in re.finditer(r"array_sort\(", text, re.IGNORECASE):
+        depth, i = 1, m.end()
+        while depth and i < len(text):
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        yield text[m.start():i]
+
+
+def _offset_comparators(source: str) -> list[str]:
+    """The array_sort calls in ``source`` whose comparator reads
+    ``offset``: a Python lambda or named function passed to
+    ``array_sort``, or a SQL ``array_sort(arr, (a, b) -> ...)``."""
+    tree = ast.parse(source)
+    defs = {n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    found = []
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Call) and len(node.args) >= 2
+                and getattr(node.func, "attr", getattr(node.func, "id", None)) == "array_sort"):
+            cmp = node.args[1]
+            cmp = defs.get(cmp.id, cmp) if isinstance(cmp, ast.Name) else cmp
+            if "offset" in ast.unparse(cmp):
+                found.append(ast.unparse(node))
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            found += [call for call in _sql_array_sorts(node.value)
+                      if SQL_COMPARATOR.search(call) and "offset" in call]
+    return found
+
+
+def test_span_order_lives_only_in_extraction():
+    """Spans are put in reading order by extract_one and extract_batch
+    alone, and every extraction path returns them that way; a module
+    that re-sorts them by offset with its own comparator states the
+    order rule a second time, and can drift from it (a comparator
+    that reads a null offset as equal to every other breaks ties
+    unlike extract_one)."""
+    pkg = Path(entry_mod.__file__).resolve().parent / "handprint_spark"
+    holders = {str(p.relative_to(pkg)): found for p in sorted(pkg.rglob("*.py"))
+               if (found := _offset_comparators(p.read_text()))}
+    assert holders == {}, (
+        f"span order restated by an offset comparator in {sorted(holders)}: "
+        "take the spans in the order extraction returned them"
+    )
+
+
+def test_offset_comparator_lint_sees_both_forms():
+    assert _offset_comparators(
+        "F.array_sort(x, lambda a, b: F.when(a['offset'] < b['offset'], -1))")
+    assert _offset_comparators(
+        'F.expr("array_sort(spans, (a, b) -> case when a.offset < b.offset then -1 end)")')
+    assert _offset_comparators("def c(a, b):\n    return a.offset\nF.array_sort(s, c)")
+    assert not _offset_comparators("F.array_sort(F.collect_list(F.struct('offset', 'x')))")
+    assert not _offset_comparators("F.array_sort(lines, lambda a, b: a.y - b.y)")

@@ -2,11 +2,13 @@
 pipeline on the same input; watermarked windowed aggregation equals
 the batch groupBy."""
 
+import glob
 import os
 import shutil
 import tempfile
 import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -436,6 +438,13 @@ def test_stream_incremental_dedup_matches_sequential_batches(spark, tmpdir):
     # index holds bands for ACCEPTED docs only (0, 2, 3)
     idx = spark.read.parquet(index_dir)
     assert set(r.doc_id for r in idx.select("doc_id").distinct().collect()) == {0, 2, 3}
+    # both sinks write the table sink's codec
+    for sink in (verdict_dir, index_dir):
+        files = glob.glob(f"{sink}/**/*.parquet", recursive=True)
+        codecs = {md.row_group(g).column(c).compression
+                  for md in map(pq.read_metadata, files)
+                  for g in range(md.num_row_groups) for c in range(md.num_columns)}
+        assert files and codecs == {"ZSTD"}, (sink, codecs)
 
     # replay idempotence: re-running batch 1's body leaves both sinks
     # with identical contents (same verdicts, no band duplication)
