@@ -266,10 +266,11 @@ def materialize_spans(
 
     The table carries a materialized ``n_media`` column and is sorted
     by it within partitions: heavy documents cluster into their own
-    parquet row groups, so the skew path's heavy/normal filter split
-    (plans/partitioning.extract_skew_aware with ``n_media_col``)
-    pushes down to row-group min/max stats and the second scan skips
-    nearly every row group instead of re-reading the media bytes —
+    parquet row groups, so the skew path's heavy-row probe and its
+    heavy/normal filter split (plans/partitioning.extract_skew_aware
+    with ``n_media_col``) push down to row-group min/max stats: the
+    probe reads only this column, and the heavy scan skips nearly
+    every row group instead of re-reading the media bytes —
     the same trick an Iceberg deployment gets from a metrics-tracked
     column + a sort order on it."""
     spans = load_documents_spans(spark, sf_dir, partitions=partitions)

@@ -15,7 +15,7 @@ from handprint_spark.operators.relational import (
     q_j1_broadcast_join,
     q_s2_whitelist_filter,
 )
-from handprint_spark.plans.partitioning import _chunk_rows, extract_skew_aware
+from handprint_spark.plans.partitioning import _chunk_rows, _heavy_probe, extract_skew_aware
 
 
 def plan_str(df, mode="formatted"):
@@ -664,6 +664,52 @@ def test_skew_split_pushes_down_on_materialized_count(spark, sf_tiny, tmp_path):
         for r in rows
     }
     assert key(df.collect()) == key(derived.collect())
+
+
+@pytest.fixture(scope="module")
+def spans_nm(spark, sf_tiny, tmp_path_factory):
+    """sf_tiny as a materialize_spans table (n_media column)."""
+    from handprint_spark.corpus import materialize_spans
+
+    return materialize_spans(spark, sf_tiny, str(tmp_path_factory.mktemp("spans_nm")),
+                             partitions=4)
+
+
+def _results(df):
+    return sorted((r.doc_id, [tuple(s) for s in r.spans], r.n_media, r.n_errors)
+                  for r in df.collect())
+
+
+def test_skew_aware_without_heavy_row_plans_bulk(spark, spans_nm):
+    """No row above the default threshold: the probe finds none and the
+    plan is extract_documents' — one Python stage, no Exchange, no
+    rejoin aggregate — with its rows."""
+    table = spark.read.parquet(spans_nm)
+    df = extract_skew_aware(table, n_media_col="n_media")
+    plan = plan_str(df, "simple")
+    assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1
+    assert "HashAggregate" not in plan
+    assert _results(df) == _results(extract_documents(table))
+
+
+def test_heavy_probe_reads_only_the_count(spark, spans_nm):
+    """The probe scans the n_media column alone, with the threshold
+    pushed to the scan; a threshold just below the largest count plans
+    the split, one at it plans the bulk path, and both return
+    extract_documents' rows."""
+    table = spark.read.parquet(spans_nm)
+    top = table.agg(F.max("n_media")).collect()[0][0]
+    n_media = F.col("n_media")
+    plan = plan_str(_heavy_probe(table.filter(n_media > top - 1), n_media))
+    assert re.search(r"ReadSchema: struct<n_media:int>\n", plan)
+    assert f"GreaterThan(n_media,{top - 1})" in plan.split("PushedFilters")[1].replace(" ", "")
+
+    plain = _results(extract_documents(table))
+    for threshold, exchanges in ((top - 1, True), (top, False)):
+        df = extract_skew_aware(table, skew_threshold=threshold, n_media_col="n_media")
+        assert ("Exchange" in plan_str(df, "simple")) is exchanges
+        assert _results(df) == plain
 
 
 def test_hash_score_zero_exchange_jvm_only(spark, sf_small):
