@@ -3,30 +3,34 @@
 The extraction pipeline is narrow (per-row), so classic join-skew
 tools don't apply to it; its skew failure mode is different: one
 multi-page document (the corpus's SKEW_MOD slice carries 25x the
-median span count; real corpora have 1000x outliers) pins one task
-while its media spans decode serially. That costs 25-33 µs per media
-on one core (traced ``decode_media_text``, 4-vCPU host), so a
-900-media document decodes in 22-30 ms. Splitting it is not free: on
-skewed seed 21 (3 documents of 300-900 media) the split plan cost
-about 0.57 s more wall time and 1.85 s more CPU per warm pass than the
-narrow one (a second Exchange, a second Python stage and a rejoin
-aggregate). The split can only pay once one document's single-core
-decode outlasts the wall time it adds: 0.57 s / 33 µs, about 17,000
-media, the default threshold.
+median span count) pins one task while its media spans decode
+serially, at 25-33 µs per media on one core (traced
+``decode_media_text``, 4-vCPU host).
 
-``extract_skew_aware`` *splits heavy rows*: a document whose media
-count exceeds that threshold, and whose offsets alone order its spans
-(every span has one, no two share one), becomes one row per slice of k
-media spans in media_ref order, each carrying only the media objects
-in its slice's ref range (text spans ride in chunk 0). The chunk rows
-are hash-repartitioned by (doc_id, chunk), extracted in several tasks,
-and rejoined by a groupBy over the heavy subset alone, in offset order.
-Any other heavy document is one chunk, taken as extraction returns it.
-So the rejoin sorts only where offsets alone fix ``extract_one``'s
-order, and every document comes back with its spans. A driver-side
-probe plans the split only when the input holds a heavy row; without
-one the plan is ``extract_documents``' own, and the shuffles only ever
-touch the heavy tail.
+``extract_skew_aware`` can *split heavy rows*: a document whose media
+count exceeds a caller's threshold, and whose offsets alone order its
+spans (every span has one, no two share one), becomes one row per
+slice of k media spans in media_ref order, each carrying only the
+media objects in its slice's ref range (text spans ride in chunk 0).
+The chunk rows are hash-repartitioned by (doc_id, chunk), extracted in
+several tasks, and rejoined by a groupBy over the heavy subset alone,
+in offset order. Any other heavy document is one chunk, taken as
+extraction returns it. So the rejoin sorts only where offsets alone fix
+``extract_one``'s order, and every document comes back with its spans.
+
+The split does not pay at any size measured, so it runs only when a
+caller names a threshold. Over one heavy document of N media beside
+400 documents of 3-20 (``perfbench/gen.py`` layout, seed 1, 4-vCPU
+host, warm no-op-sink passes, median of 4-6), the split against the
+plain plan took 1.50 s against 0.56 s of wall at N = 5,000, 6.7 s
+against 1.24 s at 17,500 and 22.7 s against 2.04 s at 35,000. Its
+cost grows with the square of N, because each of the N/k chunks
+filters the document's whole media array for its ref range, while the
+plain plan's grows linearly; on skewed seed 21 (300-900 media) it cost
+0.57 s more wall and 1.85 s more CPU per warm pass. Without a
+threshold the plan is ``extract_documents``' own; with one, a
+driver-side probe plans the split only when the input holds a heavy
+row, and the shuffles only ever touch the heavy tail.
 """
 
 from __future__ import annotations
@@ -83,39 +87,30 @@ def _chunk_rows(heavy: DataFrame, media_per_chunk: int) -> DataFrame:
     )
 
 
-def _heavy_probe(heavy: DataFrame, n_media) -> DataFrame:
-    """At most one row of the heavy filter, carrying only its media
-    count: on a materialized count column the scan reads that column
-    alone, with the threshold pushed down as a row-group filter."""
-    return heavy.select(n_media).limit(1)
-
-
 def extract_skew_aware(
     spans_with_media: DataFrame,
     media_per_chunk: int = 64,
-    skew_threshold: int = 17_000,
+    skew_threshold: int | None = None,
     n_media_col: str | None = None,
 ) -> DataFrame:
     """Extraction with heavy-document splitting (module docstring):
     output schema and spans equal ``extract_documents``'.
 
-    Rows with at most ``skew_threshold`` media, or a null count, run
-    the narrow path. Heavier rows whose offsets alone order their spans
-    split into chunks of ``media_per_chunk`` media spans, which extract
-    in parallel and rejoin sorted by offset; any other heavy row is one
-    chunk, taken exactly as extraction returns it.
+    Without a ``skew_threshold`` (the default, since no measured
+    document size makes the split pay) the result is
+    ``extract_documents(spans_with_media)``: one scan, one Python
+    stage, no Exchange, no aggregate, and no Spark job at call time.
 
-    The default threshold is the module docstring's break-even, the
-    split's added wall time over one core's decode time per media
-    (0.57 s / 33 µs): below it no split can finish sooner than one
-    task decoding the document whole.
-
-    Calling it runs a Spark action on the driver: a ``limit(1)`` probe
-    of the heavy filter. When it finds no row, the result is
-    ``extract_documents(spans_with_media)`` (one scan, one Python
-    stage, no Exchange, no aggregate); when it finds one, the normal
-    and heavy branches below. Both return ``extract_one``'s spans, so
-    the probe picks a plan and never changes a result.
+    With one, rows with at most ``skew_threshold`` media, or a null
+    count, run the narrow path. Heavier rows whose offsets alone order
+    their spans split into chunks of ``media_per_chunk`` media spans,
+    which extract in parallel and rejoin sorted by offset; any other
+    heavy row is one chunk, taken exactly as extraction returns it.
+    Calling it then runs a Spark job on the driver: a ``limit(1)``
+    probe of the heavy filter. When it finds no row, the result is the
+    plain plan above; when it finds one, the normal and heavy branches
+    below. Both return ``extract_one``'s spans, so the probe picks a
+    plan and never changes a result.
 
     ``n_media_col``: name of a materialized media-count column on the
     input table (corpus.materialize_spans writes one, sorted within
@@ -124,15 +119,20 @@ def extract_skew_aware(
     the count column of the row groups that may hold a heavy row, and
     the heavy branch's scan skips every all-normal row group, which is
     almost all of them. The media bytes are read once without a heavy
-    row (the bulk plan) and once per branch with one. With the count
+    row (the plain plan) and once per branch with one. With the count
     derived as size(media) nothing pushes down: the probe reads the
     media column (all of it when no row is heavy), so a miss reads it
-    twice, as the two branch filters alone did, and a hit up to three
-    times.
+    twice and a hit up to three times. A probe that finds no row scans
+    partitions in rounds (1, then 4x more), but on a 77-partition
+    derived-count table its 4 jobs took 0.35 s of wall, as one
+    ``count()`` job (0.38 s) and one plain scan (0.34 s) did, and a
+    hit took 0.10 s against ``count()``'s 0.52 s.
     """
+    if skew_threshold is None:
+        return extract_documents(spans_with_media)
     n_media = F.col(n_media_col) if n_media_col else F.size("media")
     heavy = spans_with_media.filter(n_media > skew_threshold)
-    if not _heavy_probe(heavy, n_media).collect():
+    if not heavy.select(n_media).limit(1).collect():
         return extract_documents(spans_with_media)
     normal = spans_with_media.filter(n_media.isNull() | (n_media <= skew_threshold))
 

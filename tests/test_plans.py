@@ -15,7 +15,7 @@ from handprint_spark.operators.relational import (
     q_j1_broadcast_join,
     q_s2_whitelist_filter,
 )
-from handprint_spark.plans.partitioning import _chunk_rows, _heavy_probe, extract_skew_aware
+from handprint_spark.plans.partitioning import _chunk_rows, extract_skew_aware
 
 
 def plan_str(df, mode="formatted"):
@@ -680,34 +680,63 @@ def _results(df):
                   for r in df.collect())
 
 
-def test_skew_aware_without_heavy_row_plans_bulk(spark, spans_nm):
-    """No row above the default threshold: the probe finds none and the
-    plan is extract_documents' — one Python stage, no Exchange, no
-    rejoin aggregate — with its rows."""
-    table = spark.read.parquet(spans_nm)
-    df = extract_skew_aware(table, n_media_col="n_media")
-    plan = plan_str(df, "simple")
+def _run_plans(spark, fn):
+    """fn's result and the physical plans of the SQL executions it ran,
+    read back from the session's SQL status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last(n):
+        bus.waitUntilEmpty()
+        count = store.executionsCount()
+        ex = store.executionsList(max(count - n, 0), n)
+        return [(ex.apply(i).executionId(), ex.apply(i).physicalPlanDescription())
+                for i in range(ex.size())]
+
+    before = max((i for i, _ in last(1)), default=-1)
+    out = fn()
+    return out, [plan for i, plan in last(8) if i > before]
+
+
+def _assert_bulk(plan):
     assert "Exchange" not in plan
     assert plan.count("MapInArrow") == 1
     assert "HashAggregate" not in plan
-    assert _results(df) == _results(extract_documents(table))
+
+
+def test_skew_aware_without_heavy_row_plans_bulk(spark, spans_nm):
+    """No threshold, or none that a row exceeds: the plan is
+    extract_documents' — one Python stage, no Exchange, no rejoin
+    aggregate — with its rows. Without a threshold no job runs when
+    the function is called."""
+    table = spark.read.parquet(spans_nm)
+    top = table.agg(F.max("n_media")).collect()[0][0]
+    plain = _results(extract_documents(table))
+    df, ran = _run_plans(spark, lambda: extract_skew_aware(table, n_media_col="n_media"))
+    assert ran == []
+    _assert_bulk(plan_str(df, "simple"))
+    assert _results(df) == plain
+
+    df = extract_skew_aware(table, skew_threshold=top, n_media_col="n_media")
+    _assert_bulk(plan_str(df, "simple"))
+    assert _results(df) == plain
 
 
 def test_heavy_probe_reads_only_the_count(spark, spans_nm):
-    """The probe scans the n_media column alone, with the threshold
-    pushed to the scan; a threshold just below the largest count plans
-    the split, one at it plans the bulk path, and both return
-    extract_documents' rows."""
+    """Calling the function with a threshold runs one job, the probe,
+    whose scan reads the n_media column alone with the threshold pushed
+    down; a threshold just below the largest count plans the split, one
+    at it the plain plan, and both return extract_documents' rows."""
     table = spark.read.parquet(spans_nm)
     top = table.agg(F.max("n_media")).collect()[0][0]
-    n_media = F.col("n_media")
-    plan = plan_str(_heavy_probe(table.filter(n_media > top - 1), n_media))
-    assert re.search(r"ReadSchema: struct<n_media:int>\n", plan)
-    assert f"GreaterThan(n_media,{top - 1})" in plan.split("PushedFilters")[1].replace(" ", "")
-
     plain = _results(extract_documents(table))
     for threshold, exchanges in ((top - 1, True), (top, False)):
-        df = extract_skew_aware(table, skew_threshold=threshold, n_media_col="n_media")
+        df, ran = _run_plans(spark, lambda: extract_skew_aware(
+            table, skew_threshold=threshold, n_media_col="n_media"))
+        assert len(ran) == 1
+        assert re.search(r"ReadSchema: struct<n_media:int>\n", ran[0])
+        assert (f"GreaterThan(n_media,{threshold})"
+                in ran[0].split("PushedFilters")[1].replace(" ", ""))
         assert ("Exchange" in plan_str(df, "simple")) is exchanges
         assert _results(df) == plain
 
