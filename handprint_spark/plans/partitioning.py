@@ -24,7 +24,7 @@ caller names a threshold. Over one heavy document of N media beside
 host, warm no-op-sink passes, median of 4-6), the split against the
 plain plan took 1.50 s against 0.56 s of wall at N = 5,000, 6.7 s
 against 1.24 s at 17,500 and 22.7 s against 2.04 s at 35,000. Its
-cost grows with the square of N, because each of the N/k chunks
+cost grows nearly with the square of N, because each of the N/k chunks
 filters the document's whole media array for its ref range, while the
 plain plan's grows linearly; on skewed seed 21 (300-900 media) it cost
 0.57 s more wall and 1.85 s more CPU per warm pass. Without a
@@ -124,9 +124,9 @@ def extract_skew_aware(
     media column (all of it when no row is heavy), so a miss reads it
     twice and a hit up to three times. A probe that finds no row scans
     partitions in rounds (1, then 4x more), but on a 77-partition
-    derived-count table its 4 jobs took 0.35 s of wall, as one
-    ``count()`` job (0.38 s) and one plain scan (0.34 s) did, and a
-    hit took 0.10 s against ``count()``'s 0.52 s.
+    derived-count table (4-vCPU host) its 4 jobs took 0.35 s of wall,
+    as one ``count()`` job (0.38 s) and one plain scan (0.34 s) did,
+    and a hit took 0.10 s against ``count()``'s 0.52 s.
     """
     if skew_threshold is None:
         return extract_documents(spans_with_media)

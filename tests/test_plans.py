@@ -705,21 +705,14 @@ def _assert_bulk(plan):
 
 
 def test_skew_aware_without_heavy_row_plans_bulk(spark, spans_nm):
-    """No threshold, or none that a row exceeds: the plan is
-    extract_documents' — one Python stage, no Exchange, no rejoin
-    aggregate — with its rows. Without a threshold no job runs when
-    the function is called."""
+    """Without a threshold no job runs when the function is called, and
+    the plan is extract_documents' — one Python stage, no Exchange, no
+    rejoin aggregate — with its rows."""
     table = spark.read.parquet(spans_nm)
-    top = table.agg(F.max("n_media")).collect()[0][0]
-    plain = _results(extract_documents(table))
     df, ran = _run_plans(spark, lambda: extract_skew_aware(table, n_media_col="n_media"))
     assert ran == []
     _assert_bulk(plan_str(df, "simple"))
-    assert _results(df) == plain
-
-    df = extract_skew_aware(table, skew_threshold=top, n_media_col="n_media")
-    _assert_bulk(plan_str(df, "simple"))
-    assert _results(df) == plain
+    assert _results(df) == _results(extract_documents(table))
 
 
 def test_heavy_probe_reads_only_the_count(spark, spans_nm):
@@ -730,14 +723,18 @@ def test_heavy_probe_reads_only_the_count(spark, spans_nm):
     table = spark.read.parquet(spans_nm)
     top = table.agg(F.max("n_media")).collect()[0][0]
     plain = _results(extract_documents(table))
-    for threshold, exchanges in ((top - 1, True), (top, False)):
-        df, ran = _run_plans(spark, lambda: extract_skew_aware(
-            table, skew_threshold=threshold, n_media_col="n_media"))
+    for threshold in (top - 1, top):
+        df, ran = _run_plans(spark, lambda t=threshold: extract_skew_aware(
+            table, skew_threshold=t, n_media_col="n_media"))
         assert len(ran) == 1
         assert re.search(r"ReadSchema: struct<n_media:int>\n", ran[0])
         assert (f"GreaterThan(n_media,{threshold})"
                 in ran[0].split("PushedFilters")[1].replace(" ", ""))
-        assert ("Exchange" in plan_str(df, "simple")) is exchanges
+        plan = plan_str(df, "simple")
+        if threshold < top:
+            assert "Exchange" in plan
+        else:
+            _assert_bulk(plan)
         assert _results(df) == plain
 
 
