@@ -314,7 +314,8 @@ def run_cli(argv: list[str] | None = None) -> int:
         if not args.quiet:
             print(
                 f"{corpus}: {metrics['docs']} documents, "
-                f"{metrics['media']} media, {metrics['errors']} errors"
+                f"{metrics['media']} media, {metrics['errors']} errors, "
+                f"jit_ms {metrics['jit_ms']}, gc_ms {metrics['gc_ms']}"
             )
 
     if not args.quiet:

@@ -11,12 +11,37 @@ multi-executor cluster reading ~100 TB and only *tested* on local[N]:
     affinity mask (tests use 4; a real cluster would use 2-3x total
     cores);
   * 128 MiB scan splits — the parquet/Iceberg sweet spot.
+
+JIT posture: the driver JVM runs C1 only (``-XX:TieredStopAtLevel=1``).
+A CLI run, a benchmark run and a test session are each one short-lived
+driver JVM, and with tiered C2 most of a warm batch's JVM CPU went to
+C2 compiling Spark's own code (planning, task serde, Parquet, Arrow,
+Hadoop ``Configuration``), still 0.27 s per bulk batch at the 40th.
+Measured on a 4-vCPU host at local[4], C2 against C1: JIT 0.9-1.4 s
+against 0.13-0.15 s per warm benchmark pass; ``cpu_ms_per_doc`` -32%
+on skewed and -22% on bulk (medians of 20 and 5 pairs); 40 bulk
+batches in one JVM 105 s against 85-95 s of CPU, with batches 30-39
+at about 2 s each either way; a default CLI run on sf0.1 129 s
+against 117 s of CPU (medians of 4 pairs). The cost: C1 code is
+slower where one JVM runs many different plans, as in the test suite
+(tier-1 wall +13% and +34% in two pairs). The env options in
+``SPARK_GRAFT_DRIVER_JAVA_OPTS`` come after the flag and HotSpot takes
+a flag's last occurrence, so
+``SPARK_GRAFT_DRIVER_JAVA_OPTS=-XX:TieredStopAtLevel=4`` restores C2.
+Executors keep C2 (a cluster's executors are long-lived); in local
+mode they are threads of the driver JVM and so run C1 too. Under
+``spark-submit`` the driver JVM exists before ``get_spark`` runs, so
+pass ``--driver-java-options -XX:TieredStopAtLevel=1`` there.
+``jvm_time_ms`` reads the JVM's JIT and GC time; ``run_batch`` reports
+both per batch.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
 # Media blobs are ~0.1-6 MB per row; 64 rows bounds an Arrow batch at
@@ -79,11 +104,36 @@ def get_spark(
         # This sandbox's virtualized CPU advertises AVX-512 but the
         # JIT'd avx3 arraycopy stubs SIGSEGV under load (observed:
         # hs_err crashes in jlong_disjoint_arraycopy_avx3 at 16+
-        # threads). Cap the JIT at AVX2.
+        # threads). Cap the JIT at AVX2. C1 only: see "JIT posture"
+        # above; the env options come last, so they can override both.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:UseAVX=2 " + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),
+            "-XX:UseAVX=2 -XX:TieredStopAtLevel=1 "
+            + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),
         )
         .config("spark.executor.extraJavaOptions", "-XX:UseAVX=2")
     )
     return builder.getOrCreate()
+
+
+@functools.lru_cache(maxsize=1)
+def _time_beans(gateway) -> tuple:
+    """The JVM's compilation MXBean and its garbage collector MXBeans,
+    looked up once per JVM: each py4j call is a round trip. The class
+    is named whole (``gateway.jvm.java...`` checks each package level
+    over py4j) and the beans are taken by index, since py4j ends an
+    iteration of a Java list on a JVM exception. Measured: 8 ms for the
+    first read in a JVM (40-50 ms without both), 0.06 ms after."""
+    mf = JavaClass("java.lang.management.ManagementFactory", gateway._gateway_client)
+    collectors = mf.getGarbageCollectorMXBeans()
+    return mf.getCompilationMXBean(), [collectors[i] for i in range(len(collectors))]
+
+
+def jvm_time_ms(spark: SparkSession) -> tuple[int, int]:
+    """(JIT, GC) milliseconds the session's JVM has spent so far: the
+    compilation MXBean's total compilation time and the summed
+    collection time of every garbage collector. In local mode that JVM
+    is the whole engine; on a cluster it is the driver only."""
+    jit, collectors = _time_beans(spark.sparkContext._gateway)
+    gc = sum(max(0, b.getCollectionTime()) for b in collectors)
+    return jit.getTotalCompilationTime(), gc

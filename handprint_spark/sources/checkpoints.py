@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_documents, observed
+from ..session import jvm_time_ms
 from . import table_sink
 
 LINEAGE_SCHEMA = (
@@ -94,7 +95,14 @@ def run_batch(
     the extraction once. The lineage row adds no Spark job into a path
     sink (a driver-side file commit) and one JVM literal append into a
     table. Every target may be a parquet path or a catalog table
-    identifier (table_sink)."""
+    identifier (table_sink).
+
+    The returned ``jit_ms`` and ``gc_ms`` are the JIT compile and GC
+    milliseconds the driver JVM spent during the batch
+    (``session.jvm_time_ms``, read before the anti-join is planned and
+    after the lineage row): the whole engine in local mode, only the
+    driver on a cluster."""
+    jit0, gc0 = jvm_time_ms(spark)
     obs = Observation()
     results = observed(extract_documents(pending_work(spark, spans_df, results_dir)), obs)
     table_sink.append_batch(results, results_dir, batch_id)
@@ -107,4 +115,6 @@ def run_batch(
     if docs:
         table_sink.append_row(spark, (batch_id, docs, media, errors, m["min_doc"], m["max_doc"]),
                               LINEAGE_SCHEMA, lineage_dir)
-    return {"batch_id": batch_id, "docs": docs, "media": media, "errors": errors}
+    jit1, gc1 = jvm_time_ms(spark)
+    return {"batch_id": batch_id, "docs": docs, "media": media, "errors": errors,
+            "jit_ms": jit1 - jit0, "gc_ms": gc1 - gc0}

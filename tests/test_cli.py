@@ -5,6 +5,7 @@ end-to-end pipeline sinks."""
 import ast
 import glob
 import os
+import re
 import shutil
 
 import pyarrow.parquet as pq
@@ -131,6 +132,17 @@ def test_from_file_filter(spark, sf_tiny, tmp_path):
     out = str(tmp_path / "out")
     n = run_cli(["-o", out, "-q", "-G", "-t", "4", "-f", str(keep), sf_tiny])
     assert n == 3
+
+
+def test_progress_line_reports_jvm_time(spark, sf_tiny, tmp_path, capsys):
+    """Without -q the per-corpus line ends with the batch's JIT and GC
+    milliseconds (run_batch's jit_ms and gc_ms)."""
+    doc_id = spark.read.parquet(f"{sf_tiny}/documents.parquet").first().doc_id
+    keep = tmp_path / "keep.txt"
+    keep.write_text(str(doc_id))
+    assert run_cli(["-o", str(tmp_path / "out"), "-G", "-t", "4", "-f", str(keep), sf_tiny]) == 1
+    out = capsys.readouterr().out
+    assert re.search(r": 1 documents, \d+ media, \d+ errors, jit_ms \d+, gc_ms \d+\n", out), out
 
 
 def test_no_grid_writes_annotated_sink(spark, sf_tiny, tmp_path):

@@ -56,6 +56,15 @@ def test_partial_then_resume_equals_single_run(spark, sf_tiny, dirs):
     assert resumed == fresh
 
 
+def test_run_batch_reports_driver_jvm_time(spark, sf_tiny, dirs):
+    """run_batch returns the JIT and GC milliseconds the driver JVM
+    spent on the batch, as non-negative ints."""
+    results_dir, lineage_dir = dirs
+    m = run_batch(spark, _spans(spark, sf_tiny).limit(20), results_dir, lineage_dir, batch_id=0)
+    for key in ("jit_ms", "gc_ms"):
+        assert type(m[key]) is int and m[key] >= 0, (key, m[key])
+
+
 def test_catalog_table_sink_resume(spark, sf_tiny):
     """Same protocol against catalog TABLE identifiers (the Iceberg
     path on a cluster; the built-in session catalog here): writeTo
