@@ -14,7 +14,7 @@ Layout:
   kernels/    pure-Python batch kernels (no Spark import) called from UDFs
   operators/  DataFrame-level operators (extraction, dedup, similarity, ...)
   sources/    table readers/writers + checkpoint/lineage protocol
-  plans/      partitioning / skew / broadcast helpers
+  plans/      extract_skew_aware, the benchmark's name for extract_documents
   streaming/  Structured Streaming surface
 """
 

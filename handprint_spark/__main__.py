@@ -186,6 +186,8 @@ def run_cli(argv: list[str] | None = None) -> int:
     shift = _parse_shift(args.text_move)
     if not 0.0 <= args.confidence <= 1.0:
         raise CannotProceed(ExitCode.bad_arg, "-n/--confidence must be in [0, 1]")
+    if args.threads is not None and args.threads < 1:
+        raise CannotProceed(ExitCode.bad_arg, "-t/--threads must be at least 1")
     if not args.corpora:
         raise CannotProceed(ExitCode.bad_arg, "no corpus directories given")
     for d in args.corpora:

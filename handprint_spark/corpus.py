@@ -259,24 +259,13 @@ def load_documents_spans(
 def materialize_spans(
     spark: SparkSession, sf_dir: str, out_dir: str, partitions: int = 32
 ) -> str:
-    """Write the derived interleaved-span table (with media) to
-    parquet — the stand-in for the north_rule's pre-existing Iceberg
-    documents table. Benchmarks read this so the flagship number
-    measures *extraction*, not corpus synthesis.
-
-    The table carries a materialized ``n_media`` column and is sorted
-    by it within partitions: heavy documents cluster into their own
-    parquet row groups, so the skew path's heavy-row probe and its
-    heavy/normal filter split (plans/partitioning.extract_skew_aware
-    with ``n_media_col``) push down to row-group min/max stats: the
-    probe reads only this column, and the heavy scan skips nearly
-    every row group instead of re-reading the media bytes —
-    the same trick an Iceberg deployment gets from a metrics-tracked
-    column + a sort order on it."""
-    spans = load_documents_spans(spark, sf_dir, partitions=partitions)
-    spans.withColumn("n_media", F.size("media")).sortWithinPartitions(
-        "n_media"
-    ).write.mode("overwrite").parquet(out_dir)
+    """Write the derived interleaved-span table ``(doc_id, spans,
+    media)`` to parquet — the stand-in for the north_rule's
+    pre-existing Iceberg documents table, so that a reader of it times
+    *extraction*, not corpus synthesis."""
+    load_documents_spans(spark, sf_dir, partitions=partitions).write.mode(
+        "overwrite"
+    ).parquet(out_dir)
     return out_dir
 
 

@@ -197,8 +197,7 @@ def observed(results: DataFrame, observation) -> DataFrame:
 def extracted_text(results: DataFrame, kinds: tuple[str, ...] = ("text", "ocr")) -> DataFrame:
     """Reading-order document text from a results table: the selected
     span kinds joined with newlines — pure JVM (array functions), no
-    Python. Every extraction path (``extract_documents``,
-    ``extract_skew_aware``) returns a document's spans in
+    Python. ``extract_documents`` returns a document's spans in
     ``extract_one``'s order, so this keeps their order and sorts
     nothing. For ground-truth comparison pass ``kinds=("ocr",)`` (the
     recognized text alone — the analog of TRResult.text)."""

@@ -492,8 +492,8 @@ def q_ev_sessionize(spark, sf_dir):
     (user_id ORDER BY ts, event_id), cumulative sum of new-session
     flags, then one per-session aggregate. Both windows and the
     groupBy share hashpartitioning(user_id), so the whole query is ONE
-    exchange; at web scale user_id is well-spread (power-user skew is
-    what AQE skew handling / salting in plans/partitioning covers)."""
+    exchange; at web scale user_id is well-spread (nothing here salts
+    a power user's events)."""
     from pyspark.sql.window import Window
 
     events = _t(spark, sf_dir, "events")

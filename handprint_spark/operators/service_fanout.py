@@ -179,19 +179,12 @@ FROM texts
 
 
 def q_flagship_skew_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship extraction run THROUGH the skew-splitting path
-    (plans/partitioning.extract_skew_aware) with a deliberately low
-    threshold, so the chunk/explode/reassemble machinery — not just the
-    narrow path — is exercised under the driver's value-hash gate.
-    Every skewed doc (SKEW_FACTOR x lines) and any long normal doc
-    crosses the threshold, splits into 8-media chunks, extracts in
-    parallel, and reassembles; output must be indistinguishable from
-    the narrow path: (doc_id, reading-order OCR text, n_media,
-    n_errors)."""
-    from ..plans.partitioning import extract_skew_aware
-
-    spans = load_documents_spans(spark, sf_dir)
-    results = extract_skew_aware(spans, media_per_chunk=8, skew_threshold=16)
+    """The flagship extraction over the whole corpus, heavy documents
+    included: every skewed doc (SKEW_FACTOR x lines) takes the one
+    narrow plan (``extract_documents``) with the rest, and the rows
+    match the DuckDB oracle below by value. Rows: (doc_id,
+    reading-order OCR text, n_media, n_errors)."""
+    results = extract_documents(load_documents_spans(spark, sf_dir))
     return extracted_text(results, kinds=("ocr",)).select(
         "doc_id", "text", "n_media", "n_errors"
     )

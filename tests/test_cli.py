@@ -44,6 +44,23 @@ def test_bad_display_and_shift_and_confidence():
         assert code == ExitCode.bad_arg, argv
 
 
+def test_threads_below_one_is_bad_arg(tmp_path, monkeypatch):
+    """-t 0 and -t -1 exit 2 before any session starts, even with a
+    valid corpus: no local[0] read as every core, no local[-1]."""
+    from handprint_spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    (tmp_path / "documents.parquet").mkdir()
+    for threads in ("0", "-1"):
+        code, exc = run_with_exit_code(
+            lambda t=threads: run_cli(["-o", str(tmp_path / "out"), "-t", t, str(tmp_path)]))
+        assert code == ExitCode.bad_arg, threads
+        assert isinstance(exc, CannotProceed)
+
+
 def test_missing_corpus_is_file_error(tmp_path):
     code, _ = run_with_exit_code(
         lambda: run_cli(["-o", str(tmp_path), str(tmp_path / "nope")])

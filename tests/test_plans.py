@@ -1,9 +1,13 @@
 """Physical-plan shape assertions: the plans we'd want at 100 TB, not
 just plans that pass. Verifies predicate pushdown reaches the parquet
-scan, small dims broadcast, the extraction pipeline is shuffle-free,
-and skew-aware extraction returns identical results."""
+scan, small dims broadcast, and the extraction pipeline is
+shuffle-free. The ``test_skew_aware_*`` heavy-document layouts are
+those of the removed heavy-document split: every document takes
+``extract_documents``' one plan, which returns ``extract_one``'s spans
+for each of them; ``extract_skew_aware`` is that plan under the
+benchmark's name."""
 
-import re
+import inspect
 
 import pyarrow.parquet as pq
 import pytest
@@ -15,7 +19,7 @@ from handprint_spark.operators.relational import (
     q_j1_broadcast_join,
     q_s2_whitelist_filter,
 )
-from handprint_spark.plans.partitioning import _chunk_rows, extract_skew_aware
+from handprint_spark.plans.partitioning import extract_skew_aware
 
 
 def plan_str(df, mode="formatted"):
@@ -58,33 +62,14 @@ def test_whole_stage_codegen_and_partial_agg(spark, sf_small):
     assert "WholeStageCodegen" in plan or "*(1)" in plan or "isFinalPlan=true" in plan
 
 
-def test_skew_aware_equals_plain(spark, sf_tiny):
-    spans = load_documents_spans(spark, sf_tiny).limit(250).cache()
-    plain = {
-        r.doc_id: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
-                   r.n_media, r.n_errors)
-        for r in extract_documents(spans).collect()
-    }
-    skew = {
-        r.doc_id: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
-                   r.n_media, r.n_errors)
-        for r in extract_skew_aware(spans, media_per_chunk=16, skew_threshold=40).collect()
-    }
-    assert plain == skew
-    spans.unpersist()
-
-
 def test_skew_aware_general_layout(spark):
-    """Chunking must not assume the corpus's 2-spans-per-media
-    interleave: a layout with 3 text spans per media, media-only runs,
-    and trailing text spans must chunk to the same result as the plain
-    path (round 2 hardcoded the 2:1 slice and would mis-assign here)."""
-    from handprint_spark.corpus import MEDIA_TYPE, SPAN_TYPE, encode_line_media
-    from pyspark.sql import types as T
+    """A layout off the corpus's 2-spans-per-media interleave: 3 text
+    spans per media and trailing text spans."""
+    from handprint_spark.corpus import encode_line_media
 
     spans, media = [], []
     off = 0
-    for i in range(9):  # 9 media spans, threshold 4 -> 3 chunks of k=4
+    for i in range(9):
         # three text spans before each media span (3:1, not 2:1)
         for t in range(3):
             spans.append({"kind": "text", "text": f"t{i}-{t}", "media_ref": "", "offset": off})
@@ -93,27 +78,15 @@ def test_skew_aware_general_layout(spark):
         spans.append({"kind": "line_image", "text": "", "media_ref": ref, "offset": off})
         off += 1
         media.append({"media_ref": ref, "content": encode_line_media("gdoc", i, f"w{i}")})
-    # trailing text spans after the last media (they ride in chunk 0)
     spans.append({"kind": "text", "text": "tail", "media_ref": "", "offset": off})
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("spans", SPAN_TYPE),
-            T.StructField("media", MEDIA_TYPE),
-        ]
-    )
-    df = spark.createDataFrame([("gdoc", spans, media)], schema)
-    plain = extract_documents(df).collect()[0]
-    skew = extract_skew_aware(df, media_per_chunk=4, skew_threshold=2).collect()[0]
-    key = lambda r: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
-                     r.n_media, r.n_errors)
-    assert key(plain) == key(skew)
-    assert plain.n_media == 9 and plain.n_errors == 0
+    row = _assert_extract_one(spark, spans, media)
+    assert row.n_media == 9 and row.n_errors == 0
 
 
 def test_skew_split_actually_triggers(spark, sf_tiny):
-    """The corpus skew slice (doc_slice_hash % 211 == 0) must exceed the
-    threshold used above, so the chunk path is exercised."""
+    """The corpus skew slice (doc_slice_hash % 211 == 0) holds docs of
+    more than 40 media, so test_skew_aware_without_heavy_row_plans_bulk
+    runs over heavy docs."""
     spans = load_documents_spans(spark, sf_tiny)
     heavy = spans.filter(F.size("media") > 40).count()
     assert heavy >= 1
@@ -131,6 +104,16 @@ def _heavy_doc(spark, spans, media):
         ]
     )
     return spark.createDataFrame([("hdoc", spans, media)], schema)
+
+
+def _assert_extract_one(spark, spans, media):
+    """extract_documents over the one-doc table returns extract_one's
+    spans, media count and error count for it, once; returns the row."""
+    rows = extract_documents(_heavy_doc(spark, spans, media)).collect()
+    _, exp, n_media, n_errors = extract_one("hdoc", spans, media)
+    assert [([s.asDict() for s in r.spans], r.n_media, r.n_errors) for r in rows] == [
+        (exp, n_media, n_errors)]
+    return rows[0]
 
 
 def _ref(i):
@@ -167,8 +150,7 @@ def _case_duplicate_ref_last_wins():
 
 
 def _case_ref_order_not_offset_order():
-    # refs descend as offsets ascend, so every chunk boundary in ref
-    # order cuts across offset order
+    # refs descend as offsets ascend, so ref order is not offset order
     spans = [_media_span(_ref(9 - i), i) for i in range(10)]
     return spans, [_media_obj(i) for i in range(10)]
 
@@ -201,25 +183,16 @@ def _case_null_refs():
     ],
 )
 def test_skew_aware_chunking_equals_narrow(spark, case):
-    """A heavy doc chunked by media_ref ranges (k=3 over 10 media
-    spans: 4 chunks) gives the narrow path's result, however its
-    media array, refs, offsets and text spans are arranged."""
-    spans, media = case()
-    df = _heavy_doc(spark, spans, media)
-    key = lambda r: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],  # noqa: E731
-                     r.n_media, r.n_errors)
-    plain = extract_documents(df).collect()[0]
-    skew = extract_skew_aware(df, media_per_chunk=3, skew_threshold=2).collect()
-    assert len(skew) == 1
-    assert key(skew[0]) == key(plain)
+    """A heavy doc of 10 media spans gives extract_one's result,
+    however its media array, refs, offsets and text spans are
+    arranged."""
+    _assert_extract_one(spark, *case())
 
 
 def test_skew_aware_duplicate_ref_picks_later_object(spark):
-    """The case above compares with the narrow path; this pins what
-    the narrow path does: the later of two objects sharing a ref wins."""
-    spans, media = _case_duplicate_ref_last_wins()
-    df = _heavy_doc(spark, spans, media)
-    row = extract_skew_aware(df, media_per_chunk=3, skew_threshold=2).collect()[0]
+    """The case above compares with extract_one; this pins what both
+    do: the later of two objects sharing a ref wins."""
+    row = _assert_extract_one(spark, *_case_duplicate_ref_last_wins())
     texts = {s.media_ref: s.text for s in row.spans}
     assert texts["hdoc/line-05"] == "later5"
     assert row.n_errors == 0
@@ -273,39 +246,11 @@ LAYOUTS = _layouts()
 
 @pytest.mark.parametrize("layout", sorted(LAYOUTS))
 def test_skew_aware_returns_extract_one_spans(spark, layout):
-    """Every heavy doc comes back from the skew path once, with
-    extract_one's spans in extract_one's order, whether or not its
-    offsets alone order its spans (threshold 0, chunks of 1 media)."""
-    spans, media = LAYOUTS[layout]
-    df = _heavy_doc(spark, spans, media)
-    rows = extract_skew_aware(df, media_per_chunk=1, skew_threshold=0).collect()
-    _, exp, n_media, n_errors = extract_one("hdoc", spans, media)
-    assert [([s.asDict() for s in r.spans], r.n_media, r.n_errors) for r in rows] == [
-        (exp, n_media, n_errors)]
+    """Every heavy doc comes back once, with extract_one's spans in
+    extract_one's order, whether or not its offsets alone order its
+    spans."""
+    _assert_extract_one(spark, *LAYOUTS[layout])
 
-
-def test_skew_chunks_spread_over_partitions(spark):
-    """One heavy doc's chunk rows (12 media, k=2: 6 chunks) land in two
-    or more partitions on local[4], behind an Exchange on
-    (doc_id, chunk) that sits before the Python stage."""
-    spans = [_media_span(_ref(i), i) for i in range(12)]
-    media = [_media_obj(i) for i in range(12)]
-    chunks = _chunk_rows(_heavy_doc(spark, spans, media), 2)
-    assert chunks.count() == 6
-    parts = {r.p for r in chunks.select(F.spark_partition_id().alias("p")).collect()}
-    assert len(parts) >= 2
-
-    plan = plan_str(extract_skew_aware(_heavy_doc(spark, spans, media),
-                                       media_per_chunk=2, skew_threshold=2), "simple")
-    lines = plan.splitlines()
-    at = [i for i, line in enumerate(lines)
-          if re.search(r"Exchange hashpartitioning\(doc_id#\d+, chunk#\d+, \d+\), "
-                       r"REPARTITION_BY_NUM", line)]
-    assert len(at) == 1
-    # the heavy branch prints last and top-down: its Python stage sits
-    # above the Exchange, and nothing below it crosses into Python
-    assert any("MapInArrow" in line for line in lines[at[0] - 2:at[0]])
-    assert not any("MapInArrow" in line for line in lines[at[0]:])
 
 
 def test_minhash_sigs_single_exchange(spark, sf_small):
@@ -633,45 +578,12 @@ def test_domain_mix_broadcasts_totals(spark, sf_small):
     assert "SortMergeJoin" not in plan
 
 
-def test_skew_split_pushes_down_on_materialized_count(spark, sf_tiny, tmp_path):
-    """With a materialized n_media column (corpus.materialize_spans),
-    the heavy/normal split filters push to the parquet scan
-    (PushedFilters on n_media) instead of re-reading media bytes to
-    evaluate size(media); results equal the derived-count path."""
-    from handprint_spark.corpus import materialize_spans
-    from handprint_spark.plans.partitioning import extract_skew_aware
-
-    out = str(tmp_path / "spans_nm")
-    materialize_spans(spark, sf_tiny, out, partitions=4)
-    table = spark.read.parquet(out)
-    assert "n_media" in table.columns
-
-    df = extract_skew_aware(
-        table, media_per_chunk=16, skew_threshold=40, n_media_col="n_media"
-    )
-    plan = plan_str(df, "simple")
-    assert "GreaterThan(n_media,40)" in plan.replace(" ", "")
-    assert "LessThanOrEqual(n_media,40)" in plan.replace(" ", "")
-
-    derived = extract_skew_aware(
-        spark.read.parquet(out).drop("n_media"),
-        media_per_chunk=16,
-        skew_threshold=40,
-    )
-    key = lambda rows: {  # noqa: E731
-        r.doc_id: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
-                   r.n_media, r.n_errors)
-        for r in rows
-    }
-    assert key(df.collect()) == key(derived.collect())
-
-
 @pytest.fixture(scope="module")
-def spans_nm(spark, sf_tiny, tmp_path_factory):
-    """sf_tiny as a materialize_spans table (n_media column)."""
+def spans_table(spark, sf_tiny, tmp_path_factory):
+    """sf_tiny as a materialize_spans table."""
     from handprint_spark.corpus import materialize_spans
 
-    return materialize_spans(spark, sf_tiny, str(tmp_path_factory.mktemp("spans_nm")),
+    return materialize_spans(spark, sf_tiny, str(tmp_path_factory.mktemp("spans")),
                              partitions=4)
 
 
@@ -698,43 +610,25 @@ def _run_plans(spark, fn):
     return out, [plan for i, plan in last(8) if i > before]
 
 
-def _assert_bulk(plan):
-    assert "Exchange" not in plan
-    assert plan.count("MapInArrow") == 1
-    assert "HashAggregate" not in plan
-
-
-def test_skew_aware_without_heavy_row_plans_bulk(spark, spans_nm):
-    """Without a threshold no job runs when the function is called, and
-    the plan is extract_documents' — one Python stage, no Exchange, no
-    rejoin aggregate — with its rows."""
-    table = spark.read.parquet(spans_nm)
-    df, ran = _run_plans(spark, lambda: extract_skew_aware(table, n_media_col="n_media"))
-    assert ran == []
-    _assert_bulk(plan_str(df, "simple"))
-    assert _results(df) == _results(extract_documents(table))
-
-
-def test_heavy_probe_reads_only_the_count(spark, spans_nm):
-    """Calling the function with a threshold runs one job, the probe,
-    whose scan reads the n_media column alone with the threshold pushed
-    down; a threshold just below the largest count plans the split, one
-    at it the plain plan, and both return extract_documents' rows."""
-    table = spark.read.parquet(spans_nm)
-    top = table.agg(F.max("n_media")).collect()[0][0]
+def test_skew_aware_without_heavy_row_plans_bulk(spark, spans_table):
+    """extract_skew_aware is extract_documents: with or without a
+    threshold, over a table with heavy docs, no job runs when it is
+    called, the plan is one Python stage with no Exchange and no
+    aggregate, and the rows are extract_documents'. perfbench reads the
+    three keyword defaults, so they are pinned too."""
+    params = inspect.signature(extract_skew_aware).parameters
+    assert {k: params[k].default for k in ("media_per_chunk", "skew_threshold", "n_media_col")
+            } == {"media_per_chunk": 64, "skew_threshold": None, "n_media_col": None}
+    table = spark.read.parquet(spans_table)
     plain = _results(extract_documents(table))
-    for threshold in (top - 1, top):
-        df, ran = _run_plans(spark, lambda t=threshold: extract_skew_aware(
-            table, skew_threshold=t, n_media_col="n_media"))
-        assert len(ran) == 1
-        assert re.search(r"ReadSchema: struct<n_media:int>\n", ran[0])
-        assert (f"GreaterThan(n_media,{threshold})"
-                in ran[0].split("PushedFilters")[1].replace(" ", ""))
+    for kwargs in ({}, dict(media_per_chunk=1, skew_threshold=0)):
+        df, ran = _run_plans(spark, lambda kw=kwargs: extract_skew_aware(
+            table, n_media_col="n_media", **kw))
+        assert ran == []
         plan = plan_str(df, "simple")
-        if threshold < top:
-            assert "Exchange" in plan
-        else:
-            _assert_bulk(plan)
+        assert "Exchange" not in plan
+        assert plan.count("MapInArrow") == 1
+        assert "HashAggregate" not in plan
         assert _results(df) == plain
 
 

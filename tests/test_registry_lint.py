@@ -101,6 +101,44 @@ def test_corpus_line_split_sql_lives_only_in_corpus():
     )
 
 
+def _imported_modules(source: str, package: str) -> set[str]:
+    """Absolute names of the modules that ``source``, a module of
+    ``package``, imports, and of each name a ``from X import name``
+    takes from X."""
+    found = set()
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            found |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = package.split(".")
+            base = base[:len(base) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            found |= {mod} | {f"{mod}.{a.name}" for a in node.names}
+    return found
+
+
+PARTITIONING = "handprint_spark.plans.partitioning"
+
+
+def test_no_package_module_imports_the_benchmark_alias():
+    """plans.partitioning is extract_documents under the benchmark's
+    name. The package calls extract_documents itself, so the benchmark
+    is the alias's one caller and can drop it with the module."""
+    pkg = Path(entry_mod.__file__).resolve().parent / "handprint_spark"
+    holders = sorted(
+        str(p.relative_to(pkg)) for p in pkg.rglob("*.py")
+        if PARTITIONING in _imported_modules(
+            p.read_text(), ".".join(p.relative_to(pkg.parent).parent.parts)))
+    assert holders == [], f"{holders} import {PARTITIONING}: call extract_documents"
+    for source, package in (
+        ("from ..plans.partitioning import extract_skew_aware", "handprint_spark.operators"),
+        ("from ..plans import partitioning", "handprint_spark.operators"),
+        ("from . import partitioning", "handprint_spark.plans"),
+        ("import handprint_spark.plans.partitioning", "handprint_spark"),
+    ):
+        assert PARTITIONING in _imported_modules(source, package), source
+
+
 # a two-argument SQL lambda, the comparator form of array_sort
 SQL_COMPARATOR = re.compile(r",\s*\(\s*\w+\s*,\s*\w+\s*\)\s*->")
 
