@@ -62,6 +62,22 @@ def test_whole_stage_codegen_and_partial_agg(spark, sf_small):
     assert "WholeStageCodegen" in plan or "*(1)" in plan or "isFinalPlan=true" in plan
 
 
+def test_skew_aware_equals_plain(spark, sf_tiny):
+    spans = load_documents_spans(spark, sf_tiny).limit(250).cache()
+    plain = {
+        r.doc_id: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
+                   r.n_media, r.n_errors)
+        for r in extract_documents(spans).collect()
+    }
+    skew = {
+        r.doc_id: ([(s.kind, s.text, s.media_ref, s.offset) for s in r.spans],
+                   r.n_media, r.n_errors)
+        for r in extract_skew_aware(spans, media_per_chunk=16, skew_threshold=40).collect()
+    }
+    assert plain == skew
+    spans.unpersist()
+
+
 def test_skew_aware_general_layout(spark):
     """A layout off the corpus's 2-spans-per-media interleave: 3 text
     spans per media and trailing text spans."""
