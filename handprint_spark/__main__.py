@@ -62,7 +62,7 @@ if __package__ in (None, ""):  # pragma: no cover — spark-submit path
     __package__ = "handprint_spark"
 
 from . import __version__
-from .errors import CannotProceed, ExitCode, run_with_exit_code
+from .errors import CannotProceed, ExitCode, main_exit
 from .kernels.render import POSSIBLE_DISPLAYS
 
 
@@ -326,12 +326,7 @@ def run_cli(argv: list[str] | None = None) -> int:
 
 
 def main() -> None:
-    code, result = run_with_exit_code(run_cli)
-    if code != ExitCode.success and isinstance(result, BaseException):
-        # CannotProceed carries (ExitCode, message); others carry message
-        parts = [str(a) for a in result.args if not isinstance(a, ExitCode)]
-        print(f"error: {' '.join(parts) or type(result).__name__}", file=sys.stderr)
-    sys.exit(int(code))
+    main_exit(run_cli)
 
 
 if __name__ == "__main__":

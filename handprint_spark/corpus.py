@@ -19,8 +19,9 @@ Span-ification rule (fixed; all three implementations — ``build_doc``,
 ``spanify`` and the SQL mirror — must agree; the tests
 ``test_span_equality_non_numeric_doc_ids`` and
 ``test_corpus_sql_mirror_matches_build_doc`` pin them to each other):
-  * sanitize: form feeds stripped from text (HPM1 uses \\f as its page
-    separator — see .claude/skills/verify gotcha);
+  * sanitize: null text is empty text; form feeds stripped from text
+    (HPM1 uses \\f as its page separator — see .claude/skills/verify
+    gotcha);
   * the document text splits into lines of WORDS_PER_LINE words;
   * slice membership derives from a HASH OF THE STRING doc_id
     (``doc_slice_hash``: 4-byte sha256 prefix — the input_hint types
@@ -48,7 +49,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -105,8 +106,9 @@ def is_padded(doc_id) -> bool:
     return doc_slice_hash(doc_id) % PAD_MOD == 0
 
 
-def split_lines(text: str) -> list[str]:
-    words = [w for w in text.replace("\f", " ").split(" ") if w]
+def split_lines(text: str | None) -> list[str]:
+    """The line split before the skew step; null text is empty text."""
+    words = [w for w in (text or "").replace("\f", " ").split(" ") if w]
     return [
         " ".join(words[i : i + WORDS_PER_LINE])
         for i in range(0, len(words), WORDS_PER_LINE)
@@ -175,13 +177,9 @@ def slice_hash_col(doc_id_col):
     )
 
 
-def spanify(documents: DataFrame) -> DataFrame:
-    """documents(doc_id,text,...) -> (doc_id, spans, media).
-
-    The line split / skew / interleave logic runs as JVM expressions
-    (whole-stage codegen); only the HPM1 encode crosses to Python, one
-    Arrow batch at a time. Narrow plan: scan → project, zero shuffles.
-    """
+def text_lines(text: Column) -> Column:
+    """JVM-side ``split_lines``: array<string> of WORDS_PER_LINE-word
+    lines, empty for null, empty or whitespace-only text."""
     # NB: built with Column functions, not F.expr strings — a literal
     # "\f" inside an expr string is parsed as backslash+f and translate
     # would strip every 'f' from the corpus (found the hard way).
@@ -191,11 +189,11 @@ def spanify(documents: DataFrame) -> DataFrame:
     # empty/whitespace-only document, where split_lines and
     # CORPUS_LINES_SQL produce zero.
     words = F.filter(
-        F.split(F.trim(F.translate(F.col("text"), "\f", " ")), " +"),
+        F.split(F.trim(F.translate(F.coalesce(text, F.lit("")), "\f", " ")), " +"),
         lambda w: w != "",
     )
     n_lines = F.ceil(F.size(words) / F.lit(WORDS_PER_LINE)).cast("int")
-    lines = F.when(n_lines <= 0, F.array().cast("array<string>")).otherwise(
+    return F.when(n_lines <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(0), F.greatest(n_lines - 1, F.lit(0))),
             lambda i: F.array_join(
@@ -203,9 +201,18 @@ def spanify(documents: DataFrame) -> DataFrame:
             ),
         )
     )
+
+
+def spanify(documents: DataFrame) -> DataFrame:
+    """documents(doc_id,text,...) -> (doc_id, spans, media).
+
+    The line split / skew / interleave logic runs as JVM expressions
+    (whole-stage codegen); only the HPM1 encode crosses to Python, one
+    Arrow batch at a time. Narrow plan: scan → project, zero shuffles.
+    """
     df = documents.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        lines.alias("lines"),
+        text_lines(F.col("text")).alias("lines"),
         slice_hash_col(F.col("doc_id")).alias("doc_hash"),
     )
     df = df.withColumn(

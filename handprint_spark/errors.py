@@ -96,9 +96,9 @@ def exit_code_for(exc: Optional[BaseException]) -> ExitCode:
 
 
 def run_with_exit_code(fn: Callable[[], object]) -> tuple[ExitCode, object]:
-    """Driver-side wrapper for entrypoints (bench/run): returns
-    (exit_code, result-or-exception) instead of exiting, so callers
-    can ``sys.exit(int(code))`` like the reference's main."""
+    """Driver-side wrapper for entrypoints (``main_exit``, and tests
+    that check a CLI's exit code without exiting): returns
+    (exit_code, result-or-exception) instead of exiting."""
     try:
         return ExitCode.success, fn()
     except SystemExit:
@@ -111,6 +111,11 @@ def run_with_exit_code(fn: Callable[[], object]) -> tuple[ExitCode, object]:
 
 
 def main_exit(fn: Callable[[], object]) -> None:
-    """Process-boundary form: run and exit with the mapped code."""
-    code, _ = run_with_exit_code(fn)
+    """Process-boundary form: run, print ``error: <message>`` on stderr
+    when ``fn`` raised, and exit with the mapped code."""
+    code, result = run_with_exit_code(fn)
+    if code != ExitCode.success and isinstance(result, BaseException):
+        # CannotProceed carries (ExitCode, message); others carry message
+        parts = [str(a) for a in result.args if not isinstance(a, ExitCode)]
+        print(f"error: {' '.join(parts) or type(result).__name__}", file=sys.stderr)
     sys.exit(int(code))

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..corpus import split_lines
+from ..corpus import text_lines
 from ..kernels.textcmp import align_lines, text_comparison
 
 LINE_STRUCT = T.StructType(
@@ -48,15 +48,12 @@ LINE_STRUCT = T.StructType(
 def ground_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ground_truth(doc_id, gt_text): the by-construction truth — the
     same deterministic line split the corpus derivation uses, joined
-    with newlines (analog of <base>.gt.txt files, manager.py:327-333)."""
-
-    @F.pandas_udf(T.StringType())
-    def gt_text(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: "\n".join(split_lines(t)))
-
+    with newlines (analog of <base>.gt.txt files, manager.py:327-333).
+    JVM-only: no Python stage."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), gt_text("text").alias("gt_text")
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.array_join(text_lines(F.col("text")), "\n").alias("gt_text"),
     )
 
 

@@ -566,84 +566,6 @@ def q_cur_mix_report(spark, sf_dir):
     )
 
 
-def q_cur_gate_stack(spark, sf_dir):
-    """(doc_id, quality_keep, c4_keep, gopher_keep, clf_keep,
-    all_keep): the per-document verdict table across the FULL text
-    gate stack — the three heuristic bundles plus the TRAINED
-    hashed-feature classifier — and the conjunction a production pass
-    ships. Extends cur_full_pipeline (exact-dup ∧ near-dup ∧ quality)
-    on the quality axis: where that query attributes loss across
-    dedup stages, this one attributes it across gates, and together
-    with cur_quality_ablation's pair matrix it is the complete
-    gate-tuning surface.
-
-    Shape: the pruned base materializes once (lazy checkpoint — the
-    ablation's codegen lesson: each gate keeps its own codegen-sized
-    projection), the classifier weights ride in as a broadcast array
-    literal (training memoized per corpus), and the four verdict
-    frames meet on doc_id as narrow (id, bool) rows."""
-    from .text_analysis import (
-        c4_verdicts,
-        clf_score_verdicts,
-        gopher_verdicts,
-        quality_verdicts,
-        train_linear_clf,
-    )
-
-    base = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .localCheckpoint(eager=False)
-    )
-    qv = quality_verdicts(base).select("doc_id", F.col("passes_quality").alias("quality_keep"))
-    cv = c4_verdicts(base).select("doc_id", F.col("c4_keep").alias("c4_keep"))
-    gv = gopher_verdicts(base).select("doc_id", F.col("passes_gopher").alias("gopher_keep"))
-    kv = clf_score_verdicts(base, train_linear_clf(spark, sf_dir)).select(
-        "doc_id", F.col("keep").alias("clf_keep")
-    )
-    return (
-        qv.join(cv, "doc_id")
-        .join(gv, "doc_id")
-        .join(kv, "doc_id")
-        .select(
-            "doc_id",
-            "quality_keep",
-            "c4_keep",
-            "gopher_keep",
-            "clf_keep",
-            (
-                F.col("quality_keep")
-                & F.col("c4_keep")
-                & F.col("gopher_keep")
-                & F.col("clf_keep")
-            ).alias("all_keep"),
-        )
-    )
-
-
-def _sql_cur_gate_stack() -> str:
-    from .text_analysis import (
-        SQL_TA_C4_RULES,
-        SQL_TA_HASH_SCORE_TRAINED,
-        _gopher_sql,
-    )
-
-    return f"""
-WITH qv AS (SELECT doc_id, passes_quality FROM ({SQL_TA_QUALITY})),
-cv AS (SELECT doc_id, c4_keep FROM ({SQL_TA_C4_RULES})),
-gv AS (SELECT doc_id, passes_gopher FROM ({_gopher_sql()})),
-kv AS (SELECT doc_id, keep FROM ({SQL_TA_HASH_SCORE_TRAINED}))
-SELECT qv.doc_id,
-       qv.passes_quality AS quality_keep,
-       cv.c4_keep AS c4_keep,
-       gv.passes_gopher AS gopher_keep,
-       kv.keep AS clf_keep,
-       (qv.passes_quality AND cv.c4_keep AND gv.passes_gopher AND kv.keep)
-           AS all_keep
-FROM qv JOIN cv USING (doc_id) JOIN gv USING (doc_id) JOIN kv USING (doc_id)
-"""
-
-
 def _sql_cur_mix_report() -> str:
     w_sql = (
         f"(CASE WHEN coalesce(TRY_CAST(regexp_extract(source, '(\\d+)$', 1) AS BIGINT), 0) % 7 = 0"
@@ -1165,119 +1087,6 @@ FROM scored
 """
 
 
-# --- gate-overlap ablation matrix --------------------------------------------
-#
-# The curation-tuning dashboard: how much do the quality gates AGREE?
-# A pair of gates with near-total overlap is redundant (drop the
-# expensive one); a pair with low overlap is filtering different
-# populations (investigate before stacking them). Every real pipeline
-# reads this matrix before freezing its gate stack.
-#
-# Shape: all three gates (ta_quality, ta_c4_rules, ta_gopher_rules)
-# are stateless projections of (doc_id, text); the pruned base is
-# materialized ONCE (lazy localCheckpoint) and each gate keeps its
-# OWN projection — chaining all three through one carry= projection
-# was measured 500x slower, because the collapsed expression tree
-# blows past whole-stage-codegen limits and the Gopher O(L²) HOFs
-# fall back to interpreted evaluation (~30 ms/doc). The verdict
-# frames that meet on doc_id are (id, bool) — narrow at any scale —
-# and the final aggregate is 1 row expanded to the 3 pair rows.
-
-
-def q_cur_quality_ablation(spark, sf_dir):
-    """(gate_a, gate_b, n_both, n_only_a, n_only_b, n_neither,
-    agree_frac, jaccard) for each unordered pair of the three
-    document-quality gates."""
-    from .text_analysis import c4_verdicts, gopher_verdicts, quality_verdicts
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .localCheckpoint(eager=False)
-    )
-    qv = quality_verdicts(docs).select("doc_id", F.col("passes_quality").alias("q"))
-    cv = c4_verdicts(docs).select("doc_id", F.col("c4_keep").alias("c"))
-    gv = gopher_verdicts(docs).select("doc_id", F.col("passes_gopher").alias("g"))
-    z = qv.join(cv, "doc_id").join(gv, "doc_id").select("q", "c", "g")
-    i = lambda col: col.cast("int")  # noqa: E731
-    agg = z.agg(
-        F.count("*").alias("n"),
-        F.sum(i(F.col("q"))).alias("sq"),
-        F.sum(i(F.col("c"))).alias("sc"),
-        F.sum(i(F.col("g"))).alias("sg"),
-        F.sum(i(F.col("q") & F.col("c"))).alias("sqc"),
-        F.sum(i(F.col("q") & F.col("g"))).alias("sqg"),
-        F.sum(i(F.col("c") & F.col("g"))).alias("scg"),
-    )
-    pair = (
-        "named_struct('gate_a', '{a}', 'gate_b', '{b}', "
-        "'n_both', {ab}, 'n_only_a', {sa} - {ab}, 'n_only_b', {sb} - {ab}, "
-        "'n_neither', n - {sa} - {sb} + {ab})"
-    )
-    pairs = ", ".join(
-        pair.format(a=a, b=b, sa=sa, sb=sb, ab=ab)
-        for a, b, sa, sb, ab in (
-            ("quality", "c4", "sq", "sc", "sqc"),
-            ("quality", "gopher", "sq", "sg", "sqg"),
-            ("c4", "gopher", "sc", "sg", "scg"),
-        )
-    )
-    return agg.select(
-        F.col("n"), F.explode(F.expr(f"array({pairs})")).alias("p")
-    ).select(
-        F.col("p.gate_a").alias("gate_a"),
-        F.col("p.gate_b").alias("gate_b"),
-        F.col("p.n_both").cast("int").alias("n_both"),
-        F.col("p.n_only_a").cast("int").alias("n_only_a"),
-        F.col("p.n_only_b").cast("int").alias("n_only_b"),
-        F.col("p.n_neither").cast("int").alias("n_neither"),
-        F.round((F.col("p.n_both") + F.col("p.n_neither")) / F.col("n"), 6).alias(
-            "agree_frac"
-        ),
-        F.round(
-            F.col("p.n_both")
-            / (F.col("p.n_both") + F.col("p.n_only_a") + F.col("p.n_only_b")),
-            6,
-        ).alias("jaccard"),
-    )
-
-
-def _sql_cur_quality_ablation() -> str:
-    from .text_analysis import SQL_TA_C4_RULES, _gopher_sql
-
-    return f"""
-WITH qv AS (SELECT doc_id, passes_quality FROM ({SQL_TA_QUALITY})),
-cv AS (SELECT doc_id, c4_keep FROM ({SQL_TA_C4_RULES})),
-gv AS (SELECT doc_id, passes_gopher FROM ({_gopher_sql()})),
-j AS (
-  SELECT qv.passes_quality AS q, cv.c4_keep AS c, gv.passes_gopher AS g
-  FROM qv JOIN cv USING (doc_id) JOIN gv USING (doc_id)
-),
-s AS (
-  SELECT count(*) AS n,
-         sum(q::INT) AS sq, sum(c::INT) AS sc, sum(g::INT) AS sg,
-         sum((q AND c)::INT) AS sqc, sum((q AND g)::INT) AS sqg,
-         sum((c AND g)::INT) AS scg
-  FROM j
-),
-p AS (
-  SELECT 'quality' AS gate_a, 'c4' AS gate_b, sqc AS ab, sq AS sa, sc AS sb, n FROM s
-  UNION ALL
-  SELECT 'quality', 'gopher', sqg, sq, sg, n FROM s
-  UNION ALL
-  SELECT 'c4', 'gopher', scg, sc, sg, n FROM s
-)
-SELECT gate_a, gate_b,
-       CAST(ab AS INT) AS n_both,
-       CAST(sa - ab AS INT) AS n_only_a,
-       CAST(sb - ab AS INT) AS n_only_b,
-       CAST(n - sa - sb + ab AS INT) AS n_neither,
-       round((ab + n - sa - sb + ab)::DOUBLE / n, 6) AS agree_frac,
-       round(ab::DOUBLE / (sa + sb - ab), 6) AS jaccard
-FROM p
-"""
-
-
 QUERIES = {
     "cur_keep_list": q_cur_keep_list,
     "cur_sample_strat": q_cur_sample_strat,
@@ -1291,9 +1100,7 @@ QUERIES = {
     "cur_split_oov": q_cur_split_oov,
     "cur_contam_purge": q_cur_contam_purge,
     "cur_dsir_select": q_cur_dsir_select,
-    "cur_quality_ablation": q_cur_quality_ablation,
     "cur_mix_report": q_cur_mix_report,
-    "cur_gate_stack": q_cur_gate_stack,
     # rows-only by design: HLL register picks are engine-specific;
     # evidence = the tolerance-banded pytest vs the exact cur_report
     "cur_report_approx": q_cur_report_approx,
@@ -1311,7 +1118,5 @@ ORACLES = {
     "cur_split_oov": SQL_CUR_SPLIT_OOV,
     "cur_contam_purge": _sql_cur_contam_purge(),
     "cur_dsir_select": SQL_CUR_DSIR_SELECT,
-    "cur_quality_ablation": _sql_cur_quality_ablation(),
     "cur_mix_report": _sql_cur_mix_report(),
-    "cur_gate_stack": _sql_cur_gate_stack(),
 }

@@ -1386,20 +1386,16 @@ def _gopher_dup_expr(n: int) -> str:
     """
 
 
-def gopher_verdicts(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+def gopher_verdicts(docs: DataFrame) -> DataFrame:
     """The Gopher gate bundle over ANY (doc_id, text) relation — two
-    stacked stateless projections shared by the batch query and
-    composition consumers (curation.q_cur_quality_ablation), with the
-    same ``carry`` passthrough contract as quality_verdicts."""
+    stacked stateless projections behind the batch query."""
     stop_arr = F.array(*[F.lit(w) for w in EN_STOP])
     base = docs.select(
         "doc_id",
-        *carry,
         _words().alias("ws"),
         F.transform(_words(), lambda w: F.length(w)).alias("wl"),
     ).select(
         "doc_id",
-        *carry,
         "ws",
         "wl",
         F.size("ws").alias("n_words"),
@@ -1409,7 +1405,6 @@ def gopher_verdicts(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     )
     cols = [
         F.col("doc_id"),
-        *[F.col(c) for c in carry],
         F.col("n_words"),
         F.round(F.col("n_chars_tot") / F.col("n_words"), 4).alias("mean_word_len"),
         F.round(F.col("n_alpha") / F.col("n_words"), 4).alias("frac_alpha_words"),
@@ -2035,20 +2030,17 @@ _C4_KEEP_LINE = (
 )
 
 
-def c4_verdicts(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+def c4_verdicts(docs: DataFrame) -> DataFrame:
     """The C4 gate bundle over ANY (doc_id, text) relation — one
     stateless zero-shuffle projection shared by the batch query and
     the streaming ingest gate (streaming/pipeline.stream_c4_rules),
-    the same shared-projection parity contract as quality_verdicts
-    (``carry`` passes extra input columns through — the ablation
-    matrix carries text so all three gates run on ONE scan)."""
-    d = docs.select("doc_id", *carry, F.expr(_C4_LINES_EXPR).alias("ls"))
+    the same shared-projection parity contract as quality_verdicts."""
+    d = docs.select("doc_id", F.expr(_C4_LINES_EXPR).alias("ls"))
     n_kept = F.size(F.expr(f"filter(ls, {_C4_KEEP_LINE})"))
     has_brace = F.expr("exists(ls, l -> contains(l, '{'))")
     has_lorem = F.expr("exists(ls, l -> contains(l, 'lorem ipsum'))")
     return d.select(
         "doc_id",
-        *carry,
         F.size("ls").cast("int").alias("n_lines"),
         n_kept.cast("int").alias("n_kept"),
         has_brace.alias("has_brace"),

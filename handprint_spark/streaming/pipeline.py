@@ -75,19 +75,23 @@ def stream_to_results(
     """Continuous ingestion into the SAME results/lineage tables the
     batch protocol writes: every micro-batch runs the full
     ``checkpoints.run_batch`` path (anti-join → spanify → extract →
-    append results → append lineage), so batch and streaming writers
-    are interchangeable consumers of one sink. Exactly-once lands on
-    two independent guards: Structured Streaming's checkpointLocation
-    (no re-delivered files after restart) and the doc_id anti-join
-    (a replayed micro-batch re-selects zero documents) — either alone
-    suffices, together a crashed stream resumes exactly like a crashed
-    batch run. Returns an unstarted DataStreamWriter; callers pick the
+    append results → append lineage) under the id
+    ``checkpoints.next_batch`` gives, not Structured Streaming's
+    micro-batch id (which restarts at 0 with every new checkpoint), so
+    the lineage row stays each batch's one commit point and batch and
+    streaming writers are interchangeable consumers of one sink.
+    Exactly-once lands on two independent guards: Structured
+    Streaming's checkpointLocation (no re-delivered files after
+    restart) and the doc_id anti-join (a replayed micro-batch
+    re-selects zero documents) — either alone suffices, together a
+    crashed stream resumes exactly like a crashed batch run. Returns an unstarted DataStreamWriter; callers pick the
     trigger (tests use availableNow)."""
-    from ..sources.checkpoints import run_batch
+    from ..sources.checkpoints import next_batch, run_batch
 
     stream = _read_doc_stream(spark, source_dir, schema, max_files_per_trigger)
 
-    def process(batch_df, batch_id: int):
+    def process(batch_df, _micro_batch_id: int):
+        batch_id = next_batch(spark, lineage_dir, results_dir)
         run_batch(spark, spanify(batch_df), results_dir, lineage_dir, batch_id=batch_id)
 
     return (
@@ -510,26 +514,6 @@ def stream_c4_rules(
 
     stream = _read_doc_stream(spark, source_dir, schema, max_files_per_trigger)
     return c4_verdicts(stream)
-
-
-def stream_gopher_rules(
-    spark: SparkSession,
-    source_dir: str,
-    schema=None,
-    max_files_per_trigger: int = 1,
-):
-    """Gopher quality gating at INGEST: readStream over a documents
-    directory → the SAME ``gopher_verdicts`` projection as the batch
-    ``ta_gopher_rules`` query (stateless stacked projections — the
-    n-gram rules are the O(L log L) sort+run-length folds — no
-    shuffle, no Python, no state). Stream and batch verdicts agree by
-    construction; with quality, C4, PII and the trained classifier
-    this completes the full ingest-time gate stack in streaming form.
-    Returns an unstarted streaming DataFrame."""
-    from ..operators.text_analysis import gopher_verdicts
-
-    stream = _read_doc_stream(spark, source_dir, schema, max_files_per_trigger)
-    return gopher_verdicts(stream)
 
 
 def stream_incremental_dedup(

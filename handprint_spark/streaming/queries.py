@@ -410,18 +410,6 @@ def q_st_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_parquet(spark, stream_c4_rules(spark, os.path.join(d, "src")), d)
 
 
-def q_st_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest-time Gopher gate drained over the sf corpus;
-    oracle = the batch ``ta_gopher_rules`` SQL (shared projection:
-    text_analysis.gopher_verdicts)."""
-    from .pipeline import stream_gopher_rules
-
-    d = _stage_documents(sf_dir, "gopher")
-    return _drain_to_parquet(
-        spark, stream_gopher_rules(spark, os.path.join(d, "src")), d
-    )
-
-
 def _oracles() -> dict:
     from ..operators.dedup import SQL_DD_CONTAMINATION, SQL_DD_INCREMENTAL
     from ..operators.html_extract import SQL_HX_MAIN_CONTENT
@@ -434,12 +422,9 @@ def _oracles() -> dict:
         _sql_ta_pii,
     )
 
-    from ..operators.text_analysis import _gopher_sql
-
     return {
         "st_pii_redact": _sql_ta_pii(),
         "st_c4_rules": SQL_TA_C4_RULES,
-        "st_gopher_rules": _gopher_sql(),
         "st_clf_gate": SQL_TA_HASH_SCORE_TRAINED,
         "st_quality_gate": SQL_TA_QUALITY,
         "st_normalize": SQL_TA_NORMALIZE,
@@ -466,7 +451,6 @@ QUERIES = {
     "st_decontaminate": q_st_decontaminate,
     "st_pii_redact": q_st_pii_redact,
     "st_c4_rules": q_st_c4_rules,
-    "st_gopher_rules": q_st_gopher_rules,
 }
 
 ORACLES = _oracles()

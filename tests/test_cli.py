@@ -208,6 +208,37 @@ def test_resume_after_a_first_run_that_kept_no_document(spark, sf_tiny, tmp_path
     assert [r.batch_id for r in spark.read.parquet(results_dir).collect()] == [0]
 
 
+def test_null_text_document_is_an_empty_document(spark, tmp_path):
+    """A document whose text is null is committed with zero spans, like
+    one whose text is empty: the batch, its grid and its -c comparison
+    succeed, and ground truth is built without a Python stage."""
+    import pyarrow as pa
+
+    from handprint_spark.operators.compare import ground_truth
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2, 3, 4], pa.int64()),
+                  "text": [None, "", "a b c d e f g", "  \f x  "]}),
+        str(corpus / "documents.parquet"),
+    )
+    out = str(tmp_path / "out")
+    code, n = run_with_exit_code(lambda: run_cli(["-o", out, "-c", "-q", "-t", "4", str(corpus)]))
+    assert (code, n) == (ExitCode.success, 4)
+    n_spans = {r.doc_id: len(r.spans)
+               for r in spark.read.parquet(os.path.join(out, "results")).collect()}
+    assert n_spans == {"1": 0, "2": 0, "3": 4, "4": 2}
+    reports = {r.doc_id for r in spark.read.parquet(os.path.join(out, "comparison")).collect()}
+    assert "1" in reports
+
+    gt = ground_truth(spark, str(corpus))
+    plan = gt._sc._jvm.PythonSQLUtils.explainString(gt._jdf.queryExecution(), "simple")
+    assert "ArrowEvalPython" not in plan, plan
+    assert {r.doc_id: r.gt_text for r in gt.collect()} == {
+        "1": "", "2": "", "3": "a b c d e f\ng", "4": "x"}
+
+
 def test_cli_writes_every_sink_through_run_batch():
     """The CLI appends to no sink itself: every sink it writes goes
     through checkpoints.run_batch, whose lineage row commits the batch

@@ -73,13 +73,21 @@ def test_run_with_exit_code_passes_system_exit_through():
     assert ei.value.code == 0
 
 
-def test_main_exit_maps_code():
+def test_main_exit_maps_code(capsys):
     with pytest.raises(SystemExit) as ei:
         errors.main_exit(lambda: (_ for _ in ()).throw(AuthFailure("x")))
     assert ei.value.code == 6
+    assert capsys.readouterr().err == "error: x\n"
+    with pytest.raises(SystemExit) as ei:
+        errors.main_exit(
+            lambda: (_ for _ in ()).throw(CannotProceed(ExitCode.bad_arg, "no corpus"))
+        )
+    assert ei.value.code == 2
+    assert capsys.readouterr().err == "error: no corpus\n"
     with pytest.raises(SystemExit) as ei:
         errors.main_exit(lambda: "ok")
     assert ei.value.code == 0
+    assert capsys.readouterr().err == ""
 
 
 def test_row_errors_stay_in_rows_job_errors_abort(spark):

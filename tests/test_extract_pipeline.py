@@ -264,6 +264,7 @@ def test_corpus_sql_mirror_matches_build_doc(sf_tiny):
     planted += [("a/b:c", text), ("ümlaut-Ø", text), ("doc-xyz", text)]
     planted += [
         ("e-empty", ""),
+        ("e-null", None),
         ("e-spaces", "   "),
         ("e-ff", "\f\f"),
         ("e-mixed", "  one\ttwo  three\nfour\ffive six  seven \f eight\t \n "),

@@ -50,6 +50,14 @@ def _plan(df):
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
 
 
+
+def test_readme_states_registry_size():
+    """README.md names the registry's size; deleting or adding a query
+    must update it."""
+    readme = (Path(entry_mod.__file__).resolve().parent / "README.md").read_text()
+    stated = [int(n) for n in re.findall(r"(\d+)\s+named queries", readme)]
+    assert stated == [len(_QUERIES)], stated
+
 @pytest.mark.parametrize("name", sorted(_QUERIES))
 def test_registry_plan_lint(spark, sf_small, name):
     df = _QUERIES[name](spark, sf_small)

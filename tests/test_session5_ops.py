@@ -390,46 +390,6 @@ def test_refetch_priority_semantics(spark, sf_tiny):
             assert r["priority"] == "hot"
 
 
-def test_gate_stack_closes_over_individual_gates(spark, sf_tiny):
-    """Each column must equal its standalone gate query's verdict and
-    all_keep must be their conjunction; the plan reads documents once
-    (checkpointed base)."""
-    from handprint_spark.operators.curation import q_cur_gate_stack
-    from handprint_spark.operators.text_analysis import (
-        q_ta_gopher_rules,
-        q_ta_hash_score_trained,
-        q_ta_quality,
-    )
-
-    df = q_cur_gate_stack(spark, sf_tiny)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
-    # the checkpointed base shows as an RDD scan, so the composed plan
-    # carries at most the classifier's memoized-training scan
-    assert plan.count("documents.parquet") <= 1
-    rows = {r["doc_id"]: r for r in df.collect()}
-    q = {r["doc_id"]: r["passes_quality"] for r in q_ta_quality(spark, sf_tiny).collect()}
-    c = {r["doc_id"]: r["c4_keep"] for r in q_ta_c4_rules(spark, sf_tiny).collect()}
-    g = {
-        r["doc_id"]: r["passes_gopher"]
-        for r in q_ta_gopher_rules(spark, sf_tiny).collect()
-    }
-    k = {
-        r["doc_id"]: r["keep"]
-        for r in q_ta_hash_score_trained(spark, sf_tiny).collect()
-    }
-    assert set(rows) == set(q)
-    for d, r in rows.items():
-        assert (r["quality_keep"], r["c4_keep"], r["gopher_keep"], r["clf_keep"]) == (
-            q[d],
-            c[d],
-            g[d],
-            k[d],
-        )
-        assert r["all_keep"] == (q[d] and c[d] and g[d] and k[d])
-    kept = sum(1 for r in rows.values() if r["all_keep"])
-    assert 0 < kept < len(rows), "stack must bite without zeroing the corpus"
-
-
 def test_phash_clusters_close_over_pairs(spark, sf_tiny):
     """Cluster labels must be the connected-component min over the
     actual verified pair graph (recomputed with a Python union-find),
@@ -540,54 +500,6 @@ def test_phash_pairs_pigeonhole(spark):
     assert got == {("a", "b"): 3, ("a", "e"): 0, ("b", "e"): 3}
 
 
-def test_quality_ablation_matrix_algebra(spark, sf_tiny):
-    """The pair matrix must be exactly the contingency algebra of the
-    three (independently pinned) gate verdict queries — and the
-    composed plan must read documents ONCE (the carry= chain, not
-    three scans + joins)."""
-    from handprint_spark.operators.curation import q_cur_quality_ablation
-    from handprint_spark.operators.text_analysis import (
-        q_ta_gopher_rules,
-        q_ta_quality,
-    )
-
-    q = {r["doc_id"]: r["passes_quality"] for r in q_ta_quality(spark, sf_tiny).collect()}
-    c = {r["doc_id"]: r["c4_keep"] for r in q_ta_c4_rules(spark, sf_tiny).collect()}
-    g = {
-        r["doc_id"]: r["passes_gopher"]
-        for r in q_ta_gopher_rules(spark, sf_tiny).collect()
-    }
-    n = len(q)
-    want = {}
-    for (na, va), (nb, vb) in [(("quality", q), ("c4", c)),
-                               (("quality", q), ("gopher", g)),
-                               (("c4", c), ("gopher", g))]:
-        both = sum(1 for d in va if va[d] and vb[d])
-        only_a = sum(1 for d in va if va[d] and not vb[d])
-        only_b = sum(1 for d in va if vb[d] and not va[d])
-        neither = n - both - only_a - only_b
-        want[(na, nb)] = (
-            both, only_a, only_b, neither,
-            round((both + neither) / n, 6),
-            round(both / (both + only_a + only_b), 6),
-        )
-    df = q_cur_quality_ablation(spark, sf_tiny)
-    # explain BEFORE executing: after collect, AQE's explain prints
-    # Final + Initial plans and every scan appears twice. The
-    # checkpointed base shows as an RDD scan, so the composed plan
-    # reads documents at most once.
-    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
-    assert plan.count("documents.parquet") <= 1
-    got = {
-        (r["gate_a"], r["gate_b"]): (
-            r["n_both"], r["n_only_a"], r["n_only_b"], r["n_neither"],
-            r["agree_frac"], r["jaccard"],
-        )
-        for r in df.collect()
-    }
-    assert got == want
-
-
 def test_filtered_topk_pushdown_and_exactness(spark, sf_tiny):
     import numpy as np
 
@@ -685,12 +597,3 @@ def test_stream_c4_rules_batch_parity(spark, sf_tiny):
     assert stream == batch
     assert {r[5] for r in batch} == {True, False}
 
-
-def test_stream_gopher_rules_batch_parity(spark, sf_tiny):
-    from handprint_spark.operators.text_analysis import q_ta_gopher_rules
-    from handprint_spark.streaming.queries import q_st_gopher_rules
-
-    batch = {tuple(r) for r in q_ta_gopher_rules(spark, sf_tiny).collect()}
-    stream = {tuple(r) for r in q_st_gopher_rules(spark, sf_tiny).collect()}
-    assert stream == batch
-    assert {r[-1] for r in batch} == {True, False}

@@ -141,6 +141,43 @@ def test_stream_to_results_checkpoint_protocol(spark, sf_tiny, tmpdir):
     assert spark.read.parquet(results_dir).count() == 50
 
 
+def test_stream_to_results_continues_batch_ids(spark, sf_tiny, tmpdir):
+    """A stream appending to a sink that a batch run already committed
+    takes its batch id from the lineage, not from Structured
+    Streaming's micro-batch id (which restarts at 0 with a new
+    checkpoint): lineage ids stay unique and each results partition
+    holds exactly one batch's documents, so a resume can drop an
+    uncommitted micro-batch without touching a committed one."""
+    from handprint_spark.corpus import spanify
+    from handprint_spark.sources.checkpoints import run_batch
+    from handprint_spark.streaming.pipeline import stream_to_results
+
+    results_dir, lineage_dir = f"{tmpdir}/results", f"{tmpdir}/lineage"
+    docs = spark.read.parquet(f"{sf_tiny}/documents.parquet").orderBy("doc_id").limit(40)
+    first = docs.limit(20)
+    rest = docs.join(first.select("doc_id"), "doc_id", "left_anti")
+    run_batch(spark, spanify(first), results_dir, lineage_dir, batch_id=0)
+    rest.coalesce(1).write.parquet(f"{tmpdir}/src")
+
+    q = stream_to_results(
+        spark, f"{tmpdir}/src", results_dir, lineage_dir, checkpoint_dir=f"{tmpdir}/ck"
+    ).trigger(availableNow=True).start()
+    q.awaitTermination(180)
+
+    lineage = sorted(
+        (r.batch_id, r.n_docs) for r in spark.read.parquet(lineage_dir).collect()
+    )
+    assert lineage == [(0, 20), (1, 20)]
+    per_batch = {
+        r.batch_id: (r.rows, r.docs)
+        for r in spark.read.parquet(results_dir)
+        .groupBy("batch_id")
+        .agg(F.count("*").alias("rows"), F.countDistinct("doc_id").alias("docs"))
+        .collect()
+    }
+    assert per_batch == {0: (20, 20), 1: (20, 20)}
+
+
 def test_stateful_first_seen_dedup(spark, sf_tiny, tmpdir):
     """applyInPandasWithState: exactly one emission per distinct text
     hash across all microbatches, duplicates suppressed by keyed state."""
