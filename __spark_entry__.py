@@ -18,8 +18,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship extraction pipeline on /root/testdata/sf0.001.
 
     documents parquet → deterministic interleaved-span derivation
-    (corpus.spanify) → narrow mapInArrow extraction (normalize chain +
-    deterministic HTR decode per media span) → exploded span rows
+    (corpus.spanify) → narrow mapInArrow extraction (the fused
+    verify-and-decode kernel, preprocess.decode_media_text, per media
+    span) → exploded span rows
     (doc_id, kind, text, media_ref, offset, n_media, n_errors).
     """
     from pyspark.sql import functions as F

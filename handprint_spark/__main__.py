@@ -50,6 +50,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from urllib.parse import urlparse
 
 if __package__ in (None, ""):  # pragma: no cover — spark-submit path
     # spark-submit runs this FILE as a bare script (no package
@@ -190,12 +191,13 @@ def run_cli(argv: list[str] | None = None) -> int:
         raise CannotProceed(ExitCode.bad_arg, "-t/--threads must be at least 1")
     if not args.corpora:
         raise CannotProceed(ExitCode.bad_arg, "no corpus directories given")
-    for d in args.corpora:
-        # the loader reads {d}/documents.parquet — validate that exact
-        # path up front so a bad input is a clean file_error (4), not a
-        # mid-run Spark AnalysisException (6)
-        table = os.path.join(d, "documents.parquet")
-        if not os.path.isdir(table) and not os.path.isfile(table):
+    # the loader reads {d}/documents.parquet — validate that exact
+    # path up front so a bad input is a clean file_error (4), not a
+    # mid-run Spark AnalysisException (6). A URI (file:, hdfs:, s3a:)
+    # is checked through the session's FileSystem once it exists.
+    tables = [os.path.join(d, "documents.parquet") for d in args.corpora]
+    for table in tables:
+        if not (urlparse(table).scheme or os.path.isdir(table) or os.path.isfile(table)):
             raise FileNotFoundError(table)
     if (args.text_color or args.text_size) and not args.quiet:
         print("note: grayscale HPM1 codec — annotation color/size are fixed")
@@ -220,6 +222,12 @@ def run_cli(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="handprint-spark-cli", master=master)
     spark.sparkContext.setLogLevel("ERROR")
 
+    from .sources import table_sink
+
+    for table in tables:
+        if urlparse(table).scheme and table_sink.load(spark, table) is None:
+            raise FileNotFoundError(table)
+
     out = args.output_dir
     prefix = f"{args.base_name}-" if args.base_name else ""
 
@@ -227,8 +235,6 @@ def run_cli(argv: list[str] | None = None) -> int:
         return os.path.join(out, f"{prefix}{name}")
 
     results_dir, lineage_dir = sink("results"), sink("lineage")
-
-    from .sources import table_sink
 
     if not args.reuse_results and table_sink.load(spark, results_dir) is not None:
         raise CannotProceed(

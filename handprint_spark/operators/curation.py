@@ -221,13 +221,18 @@ def q_cur_report_approx(spark, sf_dir):
 
 
 def run_curation_batch(spark, sf_dir, keep_dir, lineage_dir, batch_id: int) -> dict:
-    """One resumable curation batch through the SAME checkpoint
-    protocol as extraction (sources/checkpoints.py): keep-list
-    anti-join the keep sink → append new keepers → append
-    per-partition lineage. A re-run after any failure appends exactly
-    the missing doc_ids (keep-list membership is a pure function of
-    the corpus, so resumed-and-restarted sinks are equal as sets —
-    the same determinism argument as X9 extraction resume).
+    """One resumable curation batch: keep-list anti-join the keep
+    sink (checkpoints.pending_work) → append new keepers → append
+    per-partition lineage rows. The keep sink is resumable as a set:
+    keep-list membership is a pure function of the corpus, so a re-run
+    appends exactly the doc_ids the sink lacks.
+
+    This is NOT extraction's commit protocol (checkpoints.run_batch).
+    The keep sink has no batch_id partition, the lineage rows are a
+    Spark append of per-partition rows rather than one last-written
+    commit row, and nothing drops an uncommitted batch. A crash between
+    the keep append and the lineage append leaves kept rows that no
+    lineage row accounts for, and a resume skips those rows.
 
     Steady-state I/O: one read of the corpus, one anti-join against
     the keep sink's doc_id column (column-pruned scan), one results

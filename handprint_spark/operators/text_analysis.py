@@ -1318,291 +1318,6 @@ GROUP BY d.doc_id
 """
 
 
-# --- Gopher quality-rule bundle ------------------------------------------------
-
-# Thresholds from Rae et al. 2021 (Gopher), Table A1: the document
-# gates every large-scale text pipeline since has reused (Dolma,
-# RefinedWeb, FineWeb tune the constants, not the shape).
-GOPHER_TOP_LIMITS = {2: 0.20, 3: 0.18, 4: 0.16}
-GOPHER_DUP_LIMITS = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
-
-
-def _gopher_top_expr(n: int) -> str:
-    """Most-frequent-n-gram character fraction (word n-grams): the
-    maximum over gram positions of occurrence-count × gram characters,
-    over total word characters. Ties resolve to the larger product,
-    which makes the scalar deterministic without an argmax.
-
-    O(L log L) form: grams become ' '-joined strings (injective —
-    words carry no spaces), array_sort groups equal grams into runs,
-    and ONE aggregate() fold tracks the running count×chars product
-    per run (within a run the product grows with the count, so the
-    fold's greatest() ends each run at its full count × chars). The
-    previous nested filter-inside-aggregate form was O(L²) per n and
-    — because higher-order functions evaluate interpreted, outside
-    whole-stage codegen — cost ~30 ms/doc across the 9 gram exprs;
-    measured only when a consumer actually evaluates the column (a
-    count(*) prunes it, which is how the cost hid in bench rows)."""
-    ng = f"(n_words - {n} + 1)"
-    return f"""
-    CASE WHEN n_words < {n} OR n_chars_tot = 0 THEN 0.0 ELSE round(
-      aggregate(
-        array_sort(transform(sequence(1, {ng}), i -> struct(
-          array_join(slice(ws, i, {n}), ' ') AS g,
-          aggregate(slice(wl, i, {n}), 0L, (a, x) -> a + x) AS c))),
-        struct(CAST('' AS STRING) AS pg, 0L AS run, 0L AS best),
-        (acc, x) -> CASE WHEN x.g = acc.pg
-          THEN struct(x.g AS pg, acc.run + 1L AS run,
-                      greatest(acc.best, (acc.run + 1L) * x.c) AS best)
-          ELSE struct(x.g AS pg, 1L AS run,
-                      greatest(acc.best, x.c) AS best) END,
-        acc -> acc.best)
-      / CAST(n_chars_tot AS DOUBLE), 4) END
-    """
-
-
-def _gopher_dup_expr(n: int) -> str:
-    """Duplicate-n-gram position fraction: share of gram positions
-    whose word n-gram occurs at least twice in the document. (Gopher
-    counts duplicated characters; the position form is the same signal
-    bounded to [0,1] under overlaps and is mirrored exactly in SQL.)
-
-    O(L log L) form (see _gopher_top_expr): duplicated positions =
-    total positions − singleton runs, counted by one run-length fold
-    over the sorted gram strings."""
-    ng = f"(n_words - {n} + 1)"
-    return f"""
-    CASE WHEN n_words < {n} THEN 0.0 ELSE round(
-      CAST({ng} - aggregate(
-        array_sort(transform(sequence(1, {ng}), i -> array_join(slice(ws, i, {n}), ' '))),
-        struct(CAST('' AS STRING) AS pg, 0L AS run, 0L AS singles),
-        (acc, x) -> CASE WHEN x = acc.pg
-          THEN struct(x AS pg, acc.run + 1L AS run, acc.singles AS singles)
-          ELSE struct(x AS pg, 1L AS run,
-                      acc.singles + CASE WHEN acc.run = 1L THEN 1L ELSE 0L END
-                          AS singles) END,
-        acc -> acc.singles + CASE WHEN acc.run = 1L THEN 1L ELSE 0L END)
-      AS DOUBLE) / {ng}, 4) END
-    """
-
-
-def gopher_verdicts(docs: DataFrame) -> DataFrame:
-    """The Gopher gate bundle over ANY (doc_id, text) relation — two
-    stacked stateless projections behind the batch query."""
-    stop_arr = F.array(*[F.lit(w) for w in EN_STOP])
-    base = docs.select(
-        "doc_id",
-        _words().alias("ws"),
-        F.transform(_words(), lambda w: F.length(w)).alias("wl"),
-    ).select(
-        "doc_id",
-        "ws",
-        "wl",
-        F.size("ws").alias("n_words"),
-        F.aggregate("wl", F.lit(0), lambda a, x: a + x).alias("n_chars_tot"),
-        F.size(F.filter("ws", lambda w: w.rlike("[a-z]"))).alias("n_alpha"),
-        F.size(F.filter("ws", lambda w: F.array_contains(stop_arr, w))).alias("stop_hits"),
-    )
-    cols = [
-        F.col("doc_id"),
-        F.col("n_words"),
-        F.round(F.col("n_chars_tot") / F.col("n_words"), 4).alias("mean_word_len"),
-        F.round(F.col("n_alpha") / F.col("n_words"), 4).alias("frac_alpha_words"),
-        F.col("stop_hits"),
-    ]
-    gates = [
-        F.col("n_words").between(50, 100_000),
-        F.round(F.col("n_chars_tot") / F.col("n_words"), 4).between(3.0, 10.0),
-        F.round(F.col("n_alpha") / F.col("n_words"), 4) >= 0.80,
-        F.col("stop_hits") >= 2,
-    ]
-    for n, lim in GOPHER_TOP_LIMITS.items():
-        e = F.expr(_gopher_top_expr(n))
-        cols.append(e.alias(f"top{n}_frac"))
-        gates.append(e <= lim)
-    for n, lim in GOPHER_DUP_LIMITS.items():
-        e = F.expr(_gopher_dup_expr(n))
-        cols.append(e.alias(f"dup{n}_frac"))
-        gates.append(e <= lim)
-    verdict = gates[0]
-    for g in gates[1:]:
-        verdict = verdict & g
-    return base.select(*cols, verdict.alias("passes_gopher"))
-
-
-def q_ta_gopher_rules(spark, sf_dir):
-    """Gopher document-quality rule bundle (Rae et al. 2021, A1.1):
-    word-count bounds, mean-word-length bounds, alphabetic-word
-    fraction, stopword floor, most-frequent-{2,3,4}-gram character
-    fractions and duplicate-{5..10}-gram fractions, folded into one
-    `passes_gopher` verdict.
-
-    Entirely JVM-side: two stacked projections (words/lengths, then
-    the rule columns) — zero shuffle at any corpus size. The n-gram
-    rules are O(L²·n) per document over the word array; for the
-    bounded L of web documents that is the cheap path (no explode, no
-    per-gram shuffle). A pipeline facing pathological multi-MB single
-    documents routes them through the posting-list shape instead
-    (`ta_rep_2gram`: explode → (doc_id, gram) groupBy), which trades
-    one shuffle for per-row O(L) — both forms live in this module.
-    """
-    return gopher_verdicts(_docs(spark, sf_dir))
-
-
-def _gopher_sql() -> str:
-    def top(n: int) -> str:
-        ng = f"(n_words - {n} + 1)"
-        return f"""
-        CASE WHEN n_words < {n} OR n_chars_tot = 0 THEN 0.0 ELSE round(
-          list_max(list_transform(range(1, {ng} + 1), i ->
-            len(list_filter(range(1, {ng} + 1),
-                            j -> ws[j : j + {n} - 1] = ws[i : i + {n} - 1]))
-            * list_sum(wl[i : i + {n} - 1])))
-          / CAST(n_chars_tot AS DOUBLE), 4) END
-        """
-
-    def dup(n: int) -> str:
-        ng = f"(n_words - {n} + 1)"
-        return f"""
-        CASE WHEN n_words < {n} THEN 0.0 ELSE round(
-          CAST(len(list_filter(range(1, {ng} + 1), i ->
-            len(list_filter(range(1, {ng} + 1),
-                            j -> ws[j : j + {n} - 1] = ws[i : i + {n} - 1])) >= 2))
-               AS DOUBLE) / {ng}, 4) END
-        """
-
-    top_cols = ",\n".join(
-        f"{top(n)} AS top{n}_frac" for n in GOPHER_TOP_LIMITS
-    )
-    dup_cols = ",\n".join(
-        f"{dup(n)} AS dup{n}_frac" for n in GOPHER_DUP_LIMITS
-    )
-    top_gates = " AND ".join(
-        f"{top(n)} <= {lim}" for n, lim in GOPHER_TOP_LIMITS.items()
-    )
-    dup_gates = " AND ".join(
-        f"{dup(n)} <= {lim}" for n, lim in GOPHER_DUP_LIMITS.items()
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         string_split(text, ' ') AS ws,
-         list_transform(string_split(text, ' '), w -> length(w)) AS wl,
-         len(string_split(text, ' ')) AS n_words,
-         list_sum(list_transform(string_split(text, ' '), w -> length(w))) AS n_chars_tot,
-         len(list_filter(string_split(text, ' '),
-                         w -> regexp_matches(w, '[a-z]'))) AS n_alpha,
-         len(list_filter(string_split(text, ' '),
-                         w -> w IN ({_EN_LIST}))) AS stop_hits
-  FROM documents
-)
-SELECT doc_id,
-       CAST(n_words AS INT) AS n_words,
-       round(n_chars_tot::DOUBLE / n_words, 4) AS mean_word_len,
-       round(n_alpha::DOUBLE / n_words, 4) AS frac_alpha_words,
-       CAST(stop_hits AS INT) AS stop_hits,
-       {top_cols},
-       {dup_cols},
-       (n_words BETWEEN 50 AND 100000
-        AND round(n_chars_tot::DOUBLE / n_words, 4) BETWEEN 3.0 AND 10.0
-        AND round(n_alpha::DOUBLE / n_words, 4) >= 0.80
-        AND stop_hits >= 2
-        AND {top_gates}
-        AND {dup_gates}) AS passes_gopher
-FROM base
-"""
-
-
-GOPHER_DUP_POSTING_N = 5
-
-
-def q_ta_gopher_dup_posting(spark, sf_dir):
-    """The SCALE form of the Gopher duplicate-n-gram rule (n=5 here,
-    the family's largest limit): explode → (doc_id, gram) groupBy —
-    the posting-list shape `q_ta_gopher_rules`'s docstring routes
-    pathological multi-MB documents through, registered as executable
-    code rather than a comment (same policy as the approx-quantiles
-    pair). The in-row array form is O(L²·n) PER DOCUMENT inside one
-    task; this form is per-row O(L) with the quadratic replaced by a
-    well-spread (doc_id, gram) shuffle, so a 1 GB single document
-    costs a wide group, not a straggler task.
-
-    Identity with the array form (pytest-pinned on the sf corpus):
-    a position is duplicated iff its gram's doc-count c ≥ 2, so
-    dup positions = Σ_{c≥2} c and total positions = Σ c = L − n + 1.
-    Single corpus scan: short docs (n_words < n) keep their row via
-    explode_outer's null gram instead of a join back to documents.
-
-    Output: (doc_id, n_positions, n_dup_positions, dup5_frac), with
-    dup5_frac rounded at 4 like the array form's dup5 column.
-    """
-    n = GOPHER_DUP_POSTING_N
-    ws_docs = _docs(spark, sf_dir).select("doc_id", _words().alias("ws"))
-    grams = F.expr(
-        f"CASE WHEN size(ws) < {n} THEN array()"
-        f" ELSE transform(sequence(1, size(ws) - {n} + 1),"
-        f" i -> concat_ws(' ', slice(ws, i, {n}))) END"
-    )
-    per_gram = (
-        ws_docs.select("doc_id", F.explode_outer(grams).alias("gram"))
-        .groupBy("doc_id", "gram")
-        .agg(F.count("*").alias("c"))
-    )
-    counted = per_gram.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("gram").isNotNull(), F.col("c")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_positions"),
-        F.sum(
-            F.when(F.col("gram").isNotNull() & (F.col("c") >= 2), F.col("c")).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("long")
-        .alias("n_dup_positions"),
-    )
-    return counted.select(
-        "doc_id",
-        "n_positions",
-        "n_dup_positions",
-        F.when(
-            F.col("n_positions") > 0,
-            F.round(F.col("n_dup_positions") / F.col("n_positions"), 4),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("dup5_frac"),
-    )
-
-
-SQL_TA_GOPHER_DUP_POSTING = f"""
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-),
-g AS (
-  SELECT doc_id,
-         array_to_string(ws[i : i + {GOPHER_DUP_POSTING_N} - 1], ' ') AS gram
-  FROM w, unnest(generate_series(1, n - {GOPHER_DUP_POSTING_N} + 1)) AS t(i)
-  WHERE n >= {GOPHER_DUP_POSTING_N}
-),
-c AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY doc_id, gram),
-agg AS (
-  SELECT doc_id,
-         CAST(sum(c) AS BIGINT) AS n_positions,
-         CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)
-           AS n_dup_positions
-  FROM c GROUP BY doc_id
-)
-SELECT w.doc_id,
-       COALESCE(a.n_positions, 0) AS n_positions,
-       COALESCE(a.n_dup_positions, 0) AS n_dup_positions,
-       CASE WHEN COALESCE(a.n_positions, 0) > 0
-            THEN round(a.n_dup_positions::DOUBLE / a.n_positions, 4)
-            ELSE 0.0 END AS dup5_frac
-FROM w LEFT JOIN agg a USING (doc_id)
-"""
-
-
 # --- hashed-feature linear model inference -----------------------------------
 #
 # The fastText-style quality-classifier skeleton: hashing-trick
@@ -1994,7 +1709,7 @@ SELECT y, keep, CAST(count(*) AS BIGINT) AS n FROM scored GROUP BY y, keep
 # (doc_id*31 + pos) % 7, mirrored in the oracle CTE — while the
 # predicates themselves are the real C4 rules (pytest proves them on
 # hand-written natural text). Shape: ONE zero-shuffle projection of
-# stacked higher-order functions (the ta_gopher_rules plan class) —
+# stacked higher-order functions over each document's line array —
 # no explode, no Python, nothing to re-partition at 10^12 rows.
 
 C4_MIN_LINE_WORDS = 5
@@ -2384,8 +2099,6 @@ QUERIES = {
     "ta_bpe_pairs": q_ta_bpe_pairs,
     "ta_bpe_train": q_ta_bpe_train,
     "ta_bpe_encode": q_ta_bpe_encode,
-    "ta_gopher_rules": q_ta_gopher_rules,
-    "ta_gopher_dup_posting": q_ta_gopher_dup_posting,
     "ta_hash_score": q_ta_hash_score,
     "ta_train_linear_clf": q_ta_train_linear_clf,
     "ta_hash_score_trained": q_ta_hash_score_trained,
@@ -2418,8 +2131,6 @@ ORACLES = {
     "ta_bpe_pairs": SQL_TA_BPE_PAIRS,
     "ta_bpe_train": _sql_ta_bpe_train(),
     "ta_bpe_encode": _sql_ta_bpe_encode(),
-    "ta_gopher_rules": _gopher_sql(),
-    "ta_gopher_dup_posting": SQL_TA_GOPHER_DUP_POSTING,
     "ta_hash_score": SQL_TA_HASH_SCORE,
     "ta_train_linear_clf": SQL_TA_TRAIN_CLF,
     "ta_hash_score_trained": SQL_TA_HASH_SCORE_TRAINED,

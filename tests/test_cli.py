@@ -68,6 +68,25 @@ def test_missing_corpus_is_file_error(tmp_path):
     assert code == ExitCode.file_error
 
 
+def test_corpus_given_as_uri(spark, sf_tiny, tmp_path):
+    """A corpus named by a file: URI is read through the session's
+    FileSystem: it commits the same documents as its plain path, and a
+    missing one is a file_error (4) that writes no results sink."""
+    def committed(out):
+        return {r.doc_id for r in spark.read.parquet(os.path.join(out, "results")).collect()}
+
+    plain, uri = str(tmp_path / "plain"), str(tmp_path / "uri")
+    assert run_cli(["-o", plain, "-q", "-t", "4", sf_tiny]) > 0
+    assert run_cli(["-o", uri, "-q", "-t", "4", f"file://{sf_tiny}"]) > 0
+    assert committed(uri) == committed(plain)
+
+    missing = str(tmp_path / "missing")
+    code, _ = run_with_exit_code(
+        lambda: run_cli(["-o", missing, "-q", "-t", "4", f"file://{tmp_path}/nope"]))
+    assert code == ExitCode.file_error
+    assert not os.path.exists(os.path.join(missing, "results"))
+
+
 def test_add_creds_is_na_but_validates(tmp_path, capsys):
     creds = tmp_path / "creds.json"
     creds.write_text("{}")

@@ -526,16 +526,6 @@ def test_lay_paragraphs_single_exchange(spark, sf_small):
     assert "EvalPython" not in plan
 
 
-def test_gopher_rules_zero_exchange_jvm_only(spark, sf_small):
-    """The Gopher rule bundle is two stacked projections of HOFs —
-    zero shuffle, zero Python at any corpus size."""
-    from handprint_spark.operators.text_analysis import q_ta_gopher_rules
-
-    plan = plan_str(q_ta_gopher_rules(spark, sf_small), "simple")
-    assert "Exchange" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_lay_columns_single_exchange(spark, sf_small):
     """XY-cut horizontal pass: cumulative-max gutter detection and the
     per-column rollup share hashpartitioning(doc_id) — ONE exchange."""
